@@ -6,16 +6,23 @@ directory-per-table Parquet with a crash-safe swap protocol — the
 
     table/
       _CURRENT            # pointer file: name of the live version dir
-      v-<uuid>/           # immutable parquet snapshot
+      v-<uuid>/           # immutable parquet snapshot + _MANIFEST.json
       v-<uuid>/           # previous snapshot (kept until next write)
 
-A write lands in a fresh version dir first, then the pointer flips via
-write-temp + os.replace (atomic on POSIX). Readers resolve the pointer
-then read an immutable dir, so a crash mid-write never corrupts the
-live table and a crash mid-flip leaves the old pointer intact.
+Every write goes through one commit routine: the frame lands in a fresh
+version dir, hardlinked copies of any carried partitions join it, and a
+``_MANIFEST.json`` records the snapshot — the written frame's schema as
+a DDL string (partition columns last, as a partitioned read returns
+them) and each partition dir's data files. Only then does
+the pointer flip via write-temp + os.replace (atomic on POSIX). Readers
+resolve the pointer, then read an immutable, self-contained dir with the
+recorded schema, so a read never infers a type and never runs a Spark
+job; a crash mid-write never corrupts the live table and a crash
+mid-flip leaves the old pointer intact.
 
-On a real deployment this class swaps for Delta/Iceberg tables (ACID
-commit protocol, MERGE INTO, time travel); the API is kept minimal so
+The class needs a POSIX filesystem (``os.replace``, ``os.link``). On a
+real deployment it swaps for Delta/Iceberg tables (ACID commit protocol,
+MERGE INTO, time travel, object stores); the API is kept minimal so
 that swap is mechanical.
 """
 
@@ -34,8 +41,28 @@ _POINTER = "_CURRENT"
 _MANIFEST = "_MANIFEST.json"
 
 
+def _data_files(root: str) -> list[str]:
+    """Data files under ``root``, as paths relative to it (Spark's
+    ``_SUCCESS`` and Hadoop's hidden ``.crc`` sidecars excluded)."""
+    return sorted(
+        os.path.relpath(os.path.join(dirpath, name), root)
+        for dirpath, _dirs, names in os.walk(root)
+        for name in names
+        if not name.startswith(("_", "."))
+    )
+
+
+def _link_or_copy(src: str, dst: str) -> None:
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
 class TableStore:
-    """Versioned parquet table rooted at ``path``."""
+    """Versioned parquet table rooted at ``path``. ``schema`` is what
+    :meth:`read` returns before the first write; afterwards every
+    snapshot carries its own schema."""
 
     def __init__(self, spark: SparkSession, path: str, schema: StructType | None = None):
         self.spark = spark
@@ -58,181 +85,64 @@ class TableStore:
     def exists(self) -> bool:
         return self.current_version() is not None
 
-    # -- manifest ------------------------------------------------------
-    #
-    # Every merge_partitioned commit writes a version MANIFEST: for
-    # each partition directory of the snapshot, the PHYSICAL version
-    # dir its files live in plus the file names. This is the
-    # object-store-portable snapshot definition (a pointer list, the
-    # same role as an Iceberg manifest): carry_mode="manifest" carries
-    # unchanged partitions purely by reference — no link, no copy, no
-    # directory listing of old data at read time — which is what a
-    # 100 TB deployment on S3/GCS needs, where hardlinks don't exist
-    # and LIST is slow and eventually consistent. The local default
-    # carry_mode="link" additionally hardlinks the files so the
-    # version dir is self-contained (and inode-pinned-testable); the
-    # manifest is written either way, so the two modes differ only in
-    # physical placement, never in the snapshot's file SET.
-
-    def _manifest_file(self, version: str) -> str:
-        return os.path.join(self.path, version, _MANIFEST)
-
-    def _read_manifest(self, version: str) -> dict | None:
+    def _manifest(self, version: str) -> dict:
+        """The committed manifest of ``version``:
+        ``{"schema": <DDL>, "partitions": {dir: {"version", "files"}}}``."""
         try:
-            with open(self._manifest_file(version), encoding="utf-8") as f:
+            with open(os.path.join(self.path, version, _MANIFEST), encoding="utf-8") as f:
                 return json.load(f)
         except FileNotFoundError:
-            return None
-
-    def _write_manifest(
-        self,
-        version: str,
-        partitions: dict,
-        partition_col: str | None = None,
-        partition_type: str | None = None,
-    ) -> None:
-        """Commit the snapshot manifest. ``partition_col`` /
-        ``partition_type`` (Spark ``simpleString`` form, e.g.
-        ``"string"``, ``"int"``) record the partition column's DECLARED
-        type at commit time so :meth:`read` never has to *infer* it
-        from directory names — inference is per-read-group and a group
-        whose only dir is ``__HIVE_DEFAULT_PARTITION__`` infers
-        ``NullType``, which made cross-group alignment nondeterministic
-        (anchor tie-break on random version names)."""
-        doc: dict = {"partitions": partitions}
-        if partition_col is not None and partition_type is not None:
-            doc["partition_col"] = partition_col
-            doc["partition_type"] = partition_type
-        with open(self._manifest_file(version), "w", encoding="utf-8") as f:
-            json.dump(doc, f, indent=1, sort_keys=True)
+            raise FileNotFoundError(
+                f"version {version} of table {self.path} does not exist (GC'd?)"
+            ) from None
 
     def snapshot_partitions(self, version: str | None = None) -> dict | None:
-        """The snapshot's resolved partition map
-        ``{partition_dir: {"version": physical_version, "files": [...]}}``
-        from the manifest alone (no data-directory listing), or None
-        for manifest-less versions (plain ``overwrite`` output)."""
+        """The snapshot's partition map
+        ``{partition_dir: {"version": version, "files": [...]}}`` from
+        the manifest alone (no data-directory listing); empty for an
+        unpartitioned snapshot, None if the table was never written."""
         v = version or self.current_version()
-        if v is None:
-            return None
-        m = self._read_manifest(v)
-        return None if m is None else m["partitions"]
-
-    def _referenced_versions(self, version: str | None) -> set[str]:
-        parts = self.snapshot_partitions(version) if version else None
-        if not parts:
-            return set()
-        return {entry["version"] for entry in parts.values()}
+        return None if v is None else self._manifest(v)["partitions"]
 
     # -- read ----------------------------------------------------------
 
     def read(self, version: str | None = None) -> DataFrame:
-        """Snapshot read; empty (schema'd) DataFrame if never written.
-        Manifest-committed versions resolve through the manifest (one
-        read per physical version, partition columns decoded against
-        that version's base path); plain versions read their dir.
+        """Snapshot read with the schema recorded at commit; the declared
+        (possibly empty) ``schema`` if the table was never written.
 
         ``version``: time travel — read a retained snapshot instead of
-        the live one (the predecessor survives every commit, plus any
-        version a live manifest references; see :meth:`versions`).
-        Reading a GC'd version raises FileNotFoundError."""
+        the live one (the predecessor survives every commit; see
+        :meth:`versions`). Reading a GC'd version raises
+        FileNotFoundError."""
         v = version or self.current_version()
         if v is None:
             if self.schema is None:
                 raise FileNotFoundError(f"table {self.path} does not exist and no schema given")
             return self.spark.createDataFrame([], self.schema)
-        if version is not None and not os.path.isdir(os.path.join(self.path, version)):
-            raise FileNotFoundError(
-                f"version {version} of table {self.path} does not exist (GC'd?)"
-            )
-        mdoc = self._read_manifest(v)
-        parts = None if mdoc is None else mdoc.get("partitions")
-        if not parts:
-            return self.spark.read.parquet(os.path.join(self.path, v))
-        pcol = mdoc.get("partition_col")
-        ptype = mdoc.get("partition_type")
-        if ptype == "void":  # degenerate all-NULL commit; align as string
-            ptype = "string"
-        by_phys: dict[str, list[str]] = {}
-        for pdir, entry in parts.items():
-            by_phys.setdefault(entry["version"], []).append(pdir)
-        # With the partition type RECORDED in the manifest (every commit
-        # since the type was added), per-group partition-value inference
-        # is disabled entirely: values decode as strings and are cast
-        # once to the declared type — deterministic, no anchor, no
-        # inference divergence across groups (a group whose only dir is
-        # the NULL partition would otherwise infer NullType).
-        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        infer_prev = self.spark.conf.get(infer_key, "true")
-        if pcol is not None:
-            self.spark.conf.set(infer_key, "false")
-        try:
-            frames = []
-            for phys, dirs in sorted(by_phys.items()):
-                base = os.path.join(self.path, phys)
-                frames.append(
-                    self.spark.read.option("basePath", base).parquet(
-                        *[os.path.join(base, d) for d in sorted(dirs)]
-                    )
-                )
-        finally:
-            if pcol is not None:
-                self.spark.conf.set(infer_key, infer_prev)
-        if pcol is not None:
-            anchor = next((fr for fr in frames if pcol in fr.columns), frames[0])
-            target_fields = [
-                (f.name, ptype if f.name == pcol else f.dataType)
-                for f in anchor.schema.fields
-            ]
-            if pcol not in anchor.columns:
-                target_fields.append((pcol, ptype))
-        else:
-            # Legacy manifest (pre-type-recording): align to an anchor
-            # group chosen by TYPE EVIDENCE — any group containing a
-            # NullType field (the NULL-only-partition inference) is
-            # excluded from anchoring when a concrete-typed group
-            # exists; ties broken by partition-dir coverage. This keeps
-            # old manifests readable without the nondeterministic
-            # uuid-order tie-break.
-            from pyspark.sql.types import NullType
+        return self.spark.read.schema(self._manifest(v)["schema"]).parquet(
+            os.path.join(self.path, v)
+        )
 
-            groups = sorted(by_phys.items())
-            candidates = [
-                i for i in range(len(frames))
-                if not any(isinstance(f.dataType, NullType) for f in frames[i].schema.fields)
-            ] or list(range(len(frames)))
-            anchor_idx = max(candidates, key=lambda i: len(groups[i][1]))
-            target_fields = [
-                (f.name, f.dataType) for f in frames[anchor_idx].schema.fields
-            ]
-        out = None
-        for fr in frames:
-            # a group whose only dir is __HIVE_DEFAULT_PARTITION__
-            # yields NO partition column at all — synthesize it as NULL
-            aligned = fr.select(
-                *[
-                    (F.col(name) if name in fr.columns else F.lit(None))
-                    .cast(dtype)
-                    .alias(name)
-                    for name, dtype in target_fields
-                ]
-            )
-            out = aligned if out is None else out.unionByName(aligned)
-        return out
+    # -- commit --------------------------------------------------------
 
-    # -- write ---------------------------------------------------------
+    def _commit(
+        self,
+        df: DataFrame,
+        partition_by: list[str] | None = None,
+        carry_from: str | None = None,
+        carry: set[str] = frozenset(),
+    ) -> str:
+        """Write ``df`` as a new version dir, hardlink into it each
+        ``carry`` partition dir of version ``carry_from`` that ``df`` did
+        not rewrite, then write the snapshot's manifest. Returns the new
+        version; the pointer is not touched.
 
-    def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        """Write a new immutable version, then atomically flip the
-        pointer.
-
-        The version just superseded is *kept* until the next write (as
-        the module docstring promises): a concurrent reader that
-        resolved the pointer pre-flip still reads a complete snapshot.
-        Garbage collection happens here instead — after the flip, every
-        version dir other than the new live one and its immediate
-        predecessor is removed, which also reclaims dirs leaked by a
-        crash between the parquet write and the pointer flip."""
-        old = self.current_version()
+        The rewritten partition dirs are listed from what Spark actually
+        wrote, never rebuilt from values with an f-string: Hive dir
+        encoding is not str() (NULL becomes __HIVE_DEFAULT_PARTITION__,
+        special characters are URL-escaped), and a mismatch would carry
+        a stale copy of a rewritten partition next to its rewrite."""
+        partition_by = list(partition_by or [])
         version = f"v-{uuid.uuid4().hex[:12]}"
         target = os.path.join(self.path, version)
         writer = df.write.mode("overwrite")
@@ -240,18 +150,66 @@ class TableStore:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(target)
 
+        def partition_dirs() -> set[str]:
+            if not partition_by:
+                return set()
+            prefix = f"{partition_by[0]}="
+            return {
+                e for e in os.listdir(target)
+                if e.startswith(prefix) and os.path.isdir(os.path.join(target, e))
+            }
+
+        # hardlinks (copy fallback) keep every snapshot self-contained
+        # at zero data copied; .crc sidecars come along
+        for part in sorted(carry - partition_dirs()):
+            shutil.copytree(
+                os.path.join(self.path, carry_from, part),
+                os.path.join(target, part),
+                copy_function=_link_or_copy,
+            )
+        # partition columns last, where a partitioned read puts them
+        # (also when there is no partition dir to read); DDL, not the
+        # 3-5x longer JSON form, because every retained version carries
+        # its manifest and a small table's snapshot is a few KiB
+        fields = df.schema.fields
+        schema = StructType(
+            [f for f in fields if f.name not in partition_by]
+            + [f for c in partition_by for f in fields if f.name == c]
+        )
+        manifest = {
+            "schema": schema.toDDL(),
+            "partitions": {
+                d: {"version": version, "files": _data_files(os.path.join(target, d))}
+                for d in sorted(partition_dirs())
+            },
+        }
+        with open(os.path.join(target, _MANIFEST), "w", encoding="utf-8") as f:
+            json.dump(manifest, f, sort_keys=True, separators=(",", ":"))
+        return version
+
+    def _flip(self, version: str, gc: bool) -> None:
+        """Atomically point the table at ``version``. With ``gc``, then
+        remove every version dir except the new live one and its
+        predecessor: the predecessor stays for readers that resolved the
+        pointer before the flip, and dirs leaked by a crash between a
+        write and its flip are reclaimed."""
+        old = self.current_version()
         os.makedirs(self.path, exist_ok=True)
         tmp = self._pointer_path() + f".tmp-{uuid.uuid4().hex[:6]}"
         with open(tmp, "w", encoding="utf-8") as f:
             f.write(version)
         os.replace(tmp, self._pointer_path())  # atomic flip
+        if gc:
+            for entry in self.versions():
+                if entry not in (version, old):
+                    shutil.rmtree(os.path.join(self.path, entry), ignore_errors=True)
 
-        # keep the predecessor for in-flight readers, plus anything its
-        # manifest still points at (manifest-mode merge chains)
-        keep = {version, old} | self._referenced_versions(old)
-        for entry in os.listdir(self.path):
-            if entry.startswith("v-") and entry not in keep:
-                shutil.rmtree(os.path.join(self.path, entry), ignore_errors=True)
+    # -- write ---------------------------------------------------------
+
+    def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> None:
+        """Commit ``df`` as a new version, flip the pointer to it, and
+        GC every version but the new live one and its predecessor."""
+        self._flip(self._commit(df, partition_by), gc=True)
 
     def merge_partitioned(
         self,
@@ -259,174 +217,65 @@ class TableStore:
         key: str | list[str],
         partition_col: str,
         order_col: str | None = None,
-        carry_mode: str = "link",
     ) -> None:
         """Differential upsert at partition granularity — the cost-model
         fix for ``overwrite``-per-batch at scale: only the partitions
         the update batch touches are read, merged (merge.merge_upsert
         semantics), and rewritten; every untouched partition is carried
-        forward WITHOUT rewriting a byte of data. Versioning, the
-        atomic pointer flip, and GC are identical to ``overwrite`` — a
-        reader mid-flip still sees a complete snapshot either way. This
+        into the new version dir by hardlink, without rewriting a byte
+        of data. Commit, pointer flip and GC are ``overwrite``'s. This
         is the same copy-on-write shape a Delta/Iceberg MERGE produces
         (new files for changed partitions, metadata reuse for the
         rest), expressed on plain parquet; at a real deployment the
         class swaps for the table format and this method becomes
         ``MERGE INTO``.
 
-        ``carry_mode`` picks the carry-forward mechanism; the committed
-        MANIFEST (see class notes) defines the snapshot identically in
-        both:
+        The first write commits ``updates`` as is; a live version not
+        partitioned by ``partition_col`` gets a full merge.
 
-        - ``"link"`` (default, local filesystems): hardlink unchanged
-          files into the new version dir — self-contained dirs, zero
-          data copied;
-        - ``"manifest"`` (object stores): carry by POINTER only — the
-          manifest records that the partition's files live in their
-          original version dir. Nothing about an unchanged partition
-          is touched at all, which is the only shape that works where
-          hardlinks don't exist (S3/GCS) and the one that matches how
-          lakehouse formats actually commit. GC retains every version
-          a live manifest references.
-
-        Contract: the live version must have been written with
-        ``partition_by=[partition_col]``, and a key's partition value
-        must be stable across upserts (partition by a key-derived
-        bucket or a creation date, never a mutable attribute) —
-        otherwise a key could survive in two partitions. The distinct
-        partition values of the batch are collected to the driver:
-        that is metadata (one scalar per touched partition), the same
-        scale class as a lakehouse commit's file list.
+        Contract: a key's partition value must be stable across upserts
+        (partition by a key-derived bucket or a creation date, never a
+        mutable attribute) — otherwise a key could survive in two
+        partitions. The distinct partition values of the batch are
+        collected to the driver: that is metadata (one scalar per
+        touched partition), the same scale class as a lakehouse
+        commit's file list.
 
         Non-goals (documented, not silent): schema evolution and
         concurrent writers — single-writer per table, like
         ``overwrite``.
         """
-        old = self.current_version()
-        if old is None:
-            self.overwrite(updates, partition_by=[partition_col])
-            return
-        old_dir = os.path.join(self.path, old)
-        prefix = f"{partition_col}="
-        # the predecessor's partition set comes from its MANIFEST when
-        # it has one (manifest-mode carries don't physically exist in
-        # its dir); physical listing is the manifest-less fallback
-        old_manifest = self.snapshot_partitions(old) or {}
-        if old_manifest:
-            old_parts = {d for d in old_manifest if d.startswith(prefix)}
-        else:
-            old_parts = {
-                e for e in os.listdir(old_dir)
-                if e.startswith(prefix) and os.path.isdir(os.path.join(old_dir, e))
-            }
-        if not old_parts:
-            # live version isn't partitioned this way — full merge
-            from pasta_pipeline_spark.operators.merge import merge_upsert
-
-            merged = merge_upsert(self.read(), updates, key, order_col=order_col)
-            self.overwrite(merged, partition_by=[partition_col])
-            return
-
-        touched_vals = [
-            r[0] for r in updates.select(partition_col).distinct().collect()
-        ]
-
         from pasta_pipeline_spark.operators.merge import merge_upsert
 
-        # Null-safe touched-partition selection: isin() is three-valued
-        # and silently drops NULL-partition rows from the subset, which
-        # would lose every non-updated key in the NULL partition once
-        # the new version's __HIVE_DEFAULT_PARTITION__ dir supersedes
-        # the old one.
-        non_null_vals = [v for v in touched_vals if v is not None]
-        cond = F.lit(False)
-        if non_null_vals:
-            cond = cond | F.col(partition_col).isin(non_null_vals)
-        if any(v is None for v in touched_vals):
-            cond = cond | F.col(partition_col).isNull()
-        target_subset = self.read().filter(cond)
-        merged = merge_upsert(target_subset, updates, key, order_col=order_col)
-
-        version = f"v-{uuid.uuid4().hex[:12]}"
-        target = os.path.join(self.path, version)
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(target)
-
-        # The touched-directory set is derived from what Spark ACTUALLY
-        # wrote into the new version — never reconstructed from values
-        # with an f-string, because Hive dir encoding is not str(): NULL
-        # becomes __HIVE_DEFAULT_PARTITION__, special characters are
-        # URL-escaped, timestamps escape their colons. A reconstruction
-        # mismatch would hardlink a stale copy of a genuinely-touched
-        # partition NEXT TO its rewrite — duplicate rows in the new
-        # snapshot. Listing the written dirs uses the same encoder that
-        # produced the old dirs, so set subtraction is exact.
-        written_dirs = {
-            e for e in os.listdir(target)
-            if e.startswith(prefix) and os.path.isdir(os.path.join(target, e))
-        }
-
-        def _data_files(dirpath: str) -> list[str]:
-            return sorted(
-                f for f in os.listdir(dirpath)
-                if os.path.isfile(os.path.join(dirpath, f)) and not f.startswith(("_", "."))
+        old = self.current_version()
+        prefix = f"{partition_col}="
+        old_parts = {d for d in self.snapshot_partitions(old) or {} if d.startswith(prefix)}
+        if old is None:
+            merged = updates
+        elif not old_parts:
+            merged = merge_upsert(self.read(), updates, key, order_col=order_col)
+        else:
+            touched_vals = [
+                r[0] for r in updates.select(partition_col).distinct().collect()
+            ]
+            # Null-safe touched-partition selection: isin() is
+            # three-valued and silently drops NULL-partition rows from
+            # the subset, which would lose every non-updated key in the
+            # NULL partition once the new version's
+            # __HIVE_DEFAULT_PARTITION__ dir supersedes the old one.
+            non_null_vals = [v for v in touched_vals if v is not None]
+            cond = F.lit(False)
+            if non_null_vals:
+                cond = cond | F.col(partition_col).isin(non_null_vals)
+            if any(v is None for v in touched_vals):
+                cond = cond | F.col(partition_col).isNull()
+            merged = merge_upsert(
+                self.read().filter(cond), updates, key, order_col=order_col
             )
-
-        # Manifest: rewritten partitions live here; carried partitions
-        # resolve to their ULTIMATE physical home through the
-        # predecessor's manifest (pointer chains collapse at every
-        # commit, so resolution depth is always 1).
-        manifest: dict = {
-            d: {"version": version, "files": _data_files(os.path.join(target, d))}
-            for d in written_dirs
-        }
-        for part in sorted(old_parts - written_dirs):
-            prev = old_manifest.get(part)
-            if prev is None:
-                prev = {"version": old, "files": _data_files(os.path.join(old_dir, part))}
-            if carry_mode == "link":
-                # hardlink (copy fallback) into the new version dir —
-                # self-contained snapshot on local filesystems; every
-                # plain file comes along (incl. Hadoop .crc sidecars),
-                # the manifest records the data files
-                src_base = os.path.join(self.path, prev["version"], part)
-                dst_dir = os.path.join(target, part)
-                os.makedirs(dst_dir, exist_ok=True)
-                for fname in os.listdir(src_base):
-                    src = os.path.join(src_base, fname)
-                    dst = os.path.join(dst_dir, fname)
-                    if not os.path.isfile(src):
-                        continue
-                    try:
-                        os.link(src, dst)
-                    except OSError:
-                        shutil.copy2(src, dst)
-                manifest[part] = {"version": version, "files": prev["files"]}
-            elif carry_mode == "manifest":
-                manifest[part] = prev  # pointer, not a byte moved
-            else:
-                raise ValueError(f"carry_mode must be 'link' or 'manifest', got {carry_mode!r}")
-        self._write_manifest(
-            version,
-            manifest,
-            partition_col=partition_col,
-            partition_type=merged.schema[partition_col].dataType.simpleString(),
+        self._flip(
+            self._commit(merged, [partition_col], carry_from=old, carry=old_parts),
+            gc=True,
         )
-
-        tmp = self._pointer_path() + f".tmp-{uuid.uuid4().hex[:6]}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(version)
-        os.replace(tmp, self._pointer_path())  # atomic flip
-
-        # GC keeps the new and predecessor snapshots PLUS every version
-        # either of their manifests still references (manifest-mode
-        # carry pins old physical homes for as long as a live or
-        # in-flight snapshot points at them)
-        keep = {version, old}
-        keep |= self._referenced_versions(version)
-        keep |= self._referenced_versions(old)
-        for entry in os.listdir(self.path):
-            if entry.startswith("v-") and entry not in keep:
-                shutil.rmtree(os.path.join(self.path, entry), ignore_errors=True)
 
     # -- write-audit-publish ------------------------------------------
 
@@ -445,14 +294,7 @@ class TableStore:
         until the next ``overwrite``/``merge_partitioned`` commit runs
         GC — stage/audit/publish is a single logical transaction, not
         long-lived parallel branches (documented contract)."""
-        version = f"v-{uuid.uuid4().hex[:12]}"
-        target = os.path.join(self.path, version)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
-        os.makedirs(self.path, exist_ok=True)
-        return version
+        return self._commit(df, partition_by)
 
     def publish(self, version: str) -> None:
         """Write-audit-publish, final step: atomically flip the live
@@ -464,24 +306,18 @@ class TableStore:
             raise FileNotFoundError(
                 f"cannot publish {version}: not staged in {self.path}"
             )
-        tmp = self._pointer_path() + f".tmp-{uuid.uuid4().hex[:6]}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(version)
-        os.replace(tmp, self._pointer_path())  # atomic flip
+        self._flip(version, gc=False)
 
     def discard(self, version: str) -> None:
         """Drop a staged version whose audit failed. Refuses to remove
-        the LIVE version or anything a live manifest references."""
-        keep = {self.current_version()} | self._referenced_versions(
-            self.current_version()
-        )
-        if version in keep:
-            raise ValueError(f"refusing to discard live/referenced version {version}")
+        the LIVE version."""
+        if version == self.current_version():
+            raise ValueError(f"refusing to discard live version {version}")
         shutil.rmtree(os.path.join(self.path, version), ignore_errors=True)
 
     def versions(self) -> list[str]:
-        """Version dirs currently on disk (live, predecessor, and any
-        manifest-referenced physical homes), sorted; the set
+        """Version dirs currently on disk (the live one, its predecessor
+        and any version staged since the last commit), sorted; the set
         :meth:`read` can time-travel to."""
         try:
             return sorted(

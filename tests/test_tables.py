@@ -315,11 +315,16 @@ def test_merge_partitioned_null_and_escaped_partition_values(spark, tmp_table_di
     assert _inodes(_os.path.join(v1, xy_dir)) == xy_inodes
 
 
-def test_merge_partitioned_manifest_carry_is_pointer_only(spark, tmp_table_dir):
-    """carry_mode='manifest' (the object-store path): untouched
-    partitions are carried by POINTER — nothing physically appears in
-    the new version dir — and the committed manifest alone
-    reconstructs the snapshot's exact file set."""
+def _assert_live_and_predecessor(store, predecessor):
+    """After a commit, GC leaves exactly the live snapshot and the one
+    it superseded."""
+    assert set(store.versions()) == {store.current_version(), predecessor}
+
+
+def test_merge_partitioned_manifest_lists_snapshot_files(spark, tmp_table_dir):
+    """Every commit writes a manifest whose partition map alone
+    reconstructs the snapshot's exact file set, all inside the live
+    version dir (untouched partitions are hardlinked in)."""
     import os as _os
 
     store = TableStore(spark, f"{tmp_table_dir}/mm")
@@ -334,51 +339,33 @@ def test_merge_partitioned_manifest_carry_is_pointer_only(spark, tmp_table_dir):
         [(1, 1, "NEW1", 9), (401, 1, "ADD", 9)],
         "id long, day int, payload string, seq long",
     )
-    store.merge_partitioned(
-        updates, key="id", partition_col="day", order_col="seq", carry_mode="manifest"
-    )
+    store.merge_partitioned(updates, key="id", partition_col="day", order_col="seq")
     v1 = store.current_version()
-    v1_dir = _os.path.join(store.path, v1)
-
-    # pointer-only carry: only the touched partition is physically here
-    assert {d for d in _os.listdir(v1_dir) if d.startswith("day=")} == {"day=1"}
+    _assert_live_and_predecessor(store, v0)
 
     # the manifest alone reconstructs the snapshot file set: every
-    # entry names a physical (version, dir, files) triple that exists,
-    # untouched partitions point at v0, and reading exactly those
-    # files yields the merged table
+    # entry names files that exist in the live version dir, and
+    # reading exactly those files yields the merged table
     parts = store.snapshot_partitions()
     assert set(parts) == {"day=0", "day=1", "day=2", "day=3"}
-    assert parts["day=1"]["version"] == v1
-    for d in ("day=0", "day=2", "day=3"):
-        assert parts[d]["version"] == v0
-    all_files = []
     for d, entry in parts.items():
+        assert entry["version"] == v1
+        assert entry["files"]
         for fname in entry["files"]:
-            p = _os.path.join(store.path, entry["version"], d, fname)
+            p = _os.path.join(store.path, v1, d, fname)
             assert _os.path.isfile(p), p
-            all_files.append(p)
     got = {r["id"]: r["payload"] for r in store.read().collect()}
     assert len(got) == 401 and got[1] == "NEW1" and got[401] == "ADD" and got[2] == "v2"
 
-    # chained manifest merge: pointers resolve to the ULTIMATE physical
-    # home (depth stays 1) and GC keeps every referenced version
     updates2 = spark.createDataFrame(
         [(2, 2, "NEW2", 9)], "id long, day int, payload string, seq long"
     )
-    store.merge_partitioned(
-        updates2, key="id", partition_col="day", order_col="seq", carry_mode="manifest"
-    )
-    parts2 = store.snapshot_partitions()
-    assert parts2["day=0"]["version"] == v0  # still the original home
-    assert parts2["day=1"]["version"] == v1
-    assert parts2["day=2"]["version"] == store.current_version()
-    live_dirs = {d for d in _os.listdir(store.path) if d.startswith("v-")}
-    assert {v0, v1, store.current_version()} <= live_dirs
+    store.merge_partitioned(updates2, key="id", partition_col="day", order_col="seq")
+    _assert_live_and_predecessor(store, v1)
     got2 = {r["id"]: r["payload"] for r in store.read().collect()}
     assert got2[2] == "NEW2" and got2[1] == "NEW1" and len(got2) == 401
 
-    # partition pruning still reaches the scan through the manifest read
+    # partition pruning still reaches the scan of the schema'd read
     from pyspark.sql import functions as F
 
     plan = store.read().where(F.col("day") == 3)._jdf.queryExecution().explainString(
@@ -388,22 +375,21 @@ def test_merge_partitioned_manifest_carry_is_pointer_only(spark, tmp_table_dir):
 
 
 def test_manifest_carry_null_and_escaped_partitions(spark, tmp_table_dir):
-    """Pointer-only carry with Hive-encoded dirs: NULL and URL-escaped
-    partition values survive a manifest-mode merge (the NULL group may
-    be the only dir in its physical version — partition-type
-    normalization across read groups must hold)."""
+    """Carry with Hive-encoded dirs: NULL and URL-escaped partition
+    values survive a merge that leaves them untouched, and a later
+    merge touching ONLY the NULL partition."""
     store = TableStore(spark, f"{tmp_table_dir}/mnull")
     base = spark.createDataFrame(
         [(1, "a b", "keep-ab", 1), (2, "x:y", "old-xy", 1), (3, None, "keep-null", 1)],
         "id long, cat string, payload string, seq long",
     )
     store.overwrite(base, partition_by=["cat"])
+    v0 = store.current_version()
     updates = spark.createDataFrame(
         [(2, "x:y", "NEW-xy", 9)], "id long, cat string, payload string, seq long"
     )
-    store.merge_partitioned(
-        updates, key="id", partition_col="cat", order_col="seq", carry_mode="manifest"
-    )
+    store.merge_partitioned(updates, key="id", partition_col="cat", order_col="seq")
+    _assert_live_and_predecessor(store, v0)
     rows = {r["id"]: (r["cat"], r["payload"]) for r in store.read().collect()}
     assert rows == {
         1: ("a b", "keep-ab"),
@@ -412,18 +398,13 @@ def test_manifest_carry_null_and_escaped_partitions(spark, tmp_table_dir):
     }
     parts = store.snapshot_partitions()
     assert "cat=__HIVE_DEFAULT_PARTITION__" in parts
-    # carried by pointer: NULL partition physically lives in v0 only
-    v1 = store.current_version()
-    assert parts["cat=__HIVE_DEFAULT_PARTITION__"]["version"] != v1
 
-    # second manifest merge touching ONLY the NULL partition: its new
-    # physical group holds just __HIVE_DEFAULT_PARTITION__
+    v1 = store.current_version()
     u2 = spark.createDataFrame(
         [(4, None, "ADD-null", 9)], "id long, cat string, payload string, seq long"
     )
-    store.merge_partitioned(
-        u2, key="id", partition_col="cat", order_col="seq", carry_mode="manifest"
-    )
+    store.merge_partitioned(u2, key="id", partition_col="cat", order_col="seq")
+    _assert_live_and_predecessor(store, v1)
     rows2 = {r["id"]: r["payload"] for r in store.read().collect()}
     assert rows2 == {1: "keep-ab", 2: "NEW-xy", 3: "keep-null", 4: "ADD-null"}
 
@@ -461,13 +442,9 @@ def test_time_travel_read_predecessor(spark, tmp_table_dir):
 
 def _seeded_store(spark, monkeypatch, path, hexes):
     """TableStore whose version names come from a fixed hex sequence —
-    pins the round-4 flake: with random v-<uuid> names, the physical
-    version holding ONLY the NULL partition dir could sort
-    lexicographically first and win the (now removed) schema-anchor
-    tie-break, inferring the partition column as NullType and crashing
-    every sibling group's cast."""
-    import uuid as _uuid
-
+    pins the round-4 flake: with random v-<uuid> names, a version
+    holding ONLY the NULL partition dir could sort lexicographically
+    first and decide the partition column's type as NullType."""
     from pasta_pipeline_spark.sources import tables as _tables
 
     seq = iter(hexes)
@@ -483,10 +460,10 @@ def _seeded_store(spark, monkeypatch, path, hexes):
 
 
 def test_manifest_null_only_group_sorts_first(spark, monkeypatch, tmp_table_dir):
-    """Regression for the round-4 flake: force the NULL-only physical
-    version to sort lexicographically FIRST among read groups. The
-    manifest now records the partition column's type at commit, so the
-    read is deterministic regardless of version-name order."""
+    """Regression for the round-4 flake: force the version written by a
+    NULL-only merge to sort lexicographically FIRST. The manifest
+    records the schema at commit, so the read is deterministic
+    regardless of version-name order."""
     store = _seeded_store(
         spark,
         monkeypatch,
@@ -504,17 +481,14 @@ def test_manifest_null_only_group_sorts_first(spark, monkeypatch, tmp_table_dir)
     u1 = spark.createDataFrame(
         [(2, "x:y", "NEW-xy", 9)], "id long, cat string, payload string, seq long"
     )
-    store.merge_partitioned(
-        u1, key="id", partition_col="cat", order_col="seq", carry_mode="manifest"
-    )
+    store.merge_partitioned(u1, key="id", partition_col="cat", order_col="seq")
+    _assert_live_and_predecessor(store, "v-fff00000000a")
     u2 = spark.createDataFrame(
         [(4, None, "ADD-null", 9)], "id long, cat string, payload string, seq long"
     )
-    store.merge_partitioned(
-        u2, key="id", partition_col="cat", order_col="seq", carry_mode="manifest"
-    )
+    store.merge_partitioned(u2, key="id", partition_col="cat", order_col="seq")
     assert store.current_version() == "v-000000000001"
-    # three physical read groups; the NULL-only one sorts first
+    _assert_live_and_predecessor(store, "v-fff00000000b")
     rows = {r["id"]: (r["cat"], r["payload"]) for r in store.read().collect()}
     assert rows == {
         1: ("a b", "keep-ab"),
@@ -522,21 +496,16 @@ def test_manifest_null_only_group_sorts_first(spark, monkeypatch, tmp_table_dir)
         3: (None, "keep-null"),
         4: (None, "ADD-null"),
     }
-    # the commit recorded the declared partition type
-    m = store._read_manifest(store.current_version())
-    assert m["partition_col"] == "cat"
-    assert m["partition_type"] == "string"
-    # the cast path preserved the declared type end-to-end
+    # the commit recorded the declared partition type, partition column last
+    m = store._manifest(store.current_version())
+    assert m["schema"].endswith("cat STRING")
+    # the recorded schema kept the declared type end-to-end
     assert dict(store.read().dtypes)["cat"] == "string"
 
 
-def test_manifest_legacy_typeless_read_anchor(spark, monkeypatch, tmp_table_dir):
-    """Pre-type-recording manifests (no partition_col/partition_type
-    keys) still read deterministically: the fallback anchor is chosen
-    by TYPE EVIDENCE — NullType-bearing groups never anchor — even when
-    the NULL-only group sorts first."""
-    import json as _json
-
+def test_merge_into_null_partition_keeps_string_type(spark, monkeypatch, tmp_table_dir):
+    """A merge whose only touched partition is NULL, written to a version
+    that sorts first, reads back with the declared string type."""
     store = _seeded_store(
         spark,
         monkeypatch,
@@ -552,22 +521,13 @@ def test_manifest_legacy_typeless_read_anchor(spark, monkeypatch, tmp_table_dir)
     u1 = spark.createDataFrame(
         [(1, "a b", "NEW-ab", 9)], "id long, cat string, payload string, seq long"
     )
-    store.merge_partitioned(
-        u1, key="id", partition_col="cat", order_col="seq", carry_mode="manifest"
-    )
+    store.merge_partitioned(u1, key="id", partition_col="cat", order_col="seq")
+    _assert_live_and_predecessor(store, "v-fff00000000a")
     u2 = spark.createDataFrame(
         [(4, None, "ADD-null", 9)], "id long, cat string, payload string, seq long"
     )
-    store.merge_partitioned(
-        u2, key="id", partition_col="cat", order_col="seq", carry_mode="manifest"
-    )
-    # strip the recorded type → simulate a legacy manifest
-    mf = store._manifest_file(store.current_version())
-    with open(mf, encoding="utf-8") as f:
-        doc = _json.load(f)
-    doc.pop("partition_col"), doc.pop("partition_type")
-    with open(mf, "w", encoding="utf-8") as f:
-        _json.dump(doc, f)
+    store.merge_partitioned(u2, key="id", partition_col="cat", order_col="seq")
+    _assert_live_and_predecessor(store, "v-fff00000000b")
     rows = {r["id"]: (r["cat"], r["payload"]) for r in store.read().collect()}
     assert rows == {
         1: ("a b", "NEW-ab"),
@@ -575,6 +535,110 @@ def test_manifest_legacy_typeless_read_anchor(spark, monkeypatch, tmp_table_dir)
         4: (None, "ADD-null"),
     }
     assert dict(store.read().dtypes)["cat"] == "string"
+
+
+def test_string_partition_that_looks_numeric_stays_string(spark, tmp_table_dir):
+    """Partition values "007" and "010" are strings, not ints 7 and 10:
+    an inferred int type would write the merged key under code=7 next
+    to the carried code=007 dir and leave id 1 in the snapshot twice."""
+    store = TableStore(spark, f"{tmp_table_dir}/numstr")
+    store.overwrite(
+        spark.createDataFrame([(1, "007"), (2, "010")], "id long, code string"),
+        partition_by=["code"],
+    )
+    assert dict(store.read().dtypes)["code"] == "string"
+    assert sorted(store.read().collect()) == [(1, "007"), (2, "010")]
+
+    store.merge_partitioned(
+        spark.createDataFrame([(3, "007")], "id long, code string"),
+        key="id", partition_col="code",
+    )
+    got = store.read()
+    assert dict(got.dtypes)["code"] == "string"
+    ids = [r["id"] for r in got.collect()]
+    assert sorted(ids) == [1, 2, 3]  # each key once
+    assert {r["id"]: r["code"] for r in got.collect()} == {1: "007", 2: "010", 3: "007"}
+
+
+def test_empty_partitioned_first_commit_reads_back_empty(spark, tmp_table_dir):
+    """A first commit of an empty frame with ``partition_by`` writes no
+    data file to infer a schema from; the read still returns an empty
+    frame with the written schema, and a merge can follow it."""
+    store = TableStore(spark, f"{tmp_table_dir}/empty")
+    schema = "id long, day int, payload string"
+    store.overwrite(spark.createDataFrame([], schema), partition_by=["day"])
+    got = store.read()
+    assert got.count() == 0
+    assert got.dtypes == [("id", "bigint"), ("payload", "string"), ("day", "int")]
+
+    store.merge_partitioned(
+        spark.createDataFrame([(1, 3, "a")], schema), key="id", partition_col="day"
+    )
+    assert store.read().collect() == [(1, "a", 3)]
+
+
+def test_read_submits_no_spark_jobs(spark, tmp_table_dir):
+    """The schema recorded at commit replaces schema inference, so a
+    read of a partitioned or an unpartitioned snapshot plans without a
+    single Spark job."""
+    part = TableStore(spark, f"{tmp_table_dir}/jobs_part")
+    part.overwrite(
+        spark.createDataFrame([(1, 0), (2, 1), (3, None)], "id long, day int"),
+        partition_by=["day"],
+    )
+    part.merge_partitioned(
+        spark.createDataFrame([(4, 1)], "id long, day int"), key="id", partition_col="day"
+    )
+    flat = TableStore(spark, f"{tmp_table_dir}/jobs_flat")
+    flat.overwrite(spark.range(10))
+
+    sc = spark.sparkContext
+    group = "tables-read-jobs-probe"
+    sc.setJobGroup(group, "TableStore.read")
+    try:
+        part.read()
+        flat.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_live_bytes_sums_live_snapshot_data_files(spark, tmp_table_dir):
+    """The benchmark's ``space_amp`` sizes live snapshots from the
+    manifest (perfbench/measure.py ``live_bytes``): it must equal the
+    summed size of the live version's data files."""
+    import importlib.util
+    import os as _os
+
+    here = _os.path.dirname(_os.path.abspath(__file__))
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_measure", _os.path.join(here, "..", "perfbench", "measure.py")
+    )
+    measure = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(measure)
+
+    def data_bytes(store):
+        vdir = _os.path.join(store.path, store.current_version())
+        return sum(
+            _os.path.getsize(_os.path.join(dirpath, name))
+            for dirpath, _dirs, names in _os.walk(vdir)
+            for name in names
+            if not name.startswith(("_", "."))
+        )
+
+    store = TableStore(spark, f"{tmp_table_dir}/live")
+    store.overwrite(
+        spark.createDataFrame(
+            [(i, i % 3, f"v{i}") for i in range(60)], "id long, day int, p string"
+        ),
+        partition_by=["day"],
+    )
+    assert measure.live_bytes(store) == data_bytes(store) > 0
+    store.merge_partitioned(
+        spark.createDataFrame([(1, 1, "NEW"), (100, 5, "ADD")], "id long, day int, p string"),
+        key="id", partition_col="day",
+    )
+    assert measure.live_bytes(store) == data_bytes(store) > 0
 
 
 def test_write_audit_publish(spark, tmp_table_dir):
