@@ -20,7 +20,13 @@ Scale design (100 TB posture):
   O(n²) naive pair join;
 - token hashing uses md5-hex→int60 (cross-engine exact, so tiers 0-3
   are DuckDB-oracle-checkable); MinHash permutations use xxhash64
-  (JVM-side, fastest) since LSH is verified by tier-3 anyway.
+  (JVM-side, fastest) since LSH is verified by tier-3 anyway;
+- every MinHash signature — batch pairs, the streaming index
+  (streaming/dedup.py) and the md5-family audits — comes from ONE
+  NumPy kernel (:func:`_minhash_sigs`, a mapInPandas stage over
+  each doc's base-hash list) and travels as one ``sig array<bigint>``
+  column; banding (:func:`_lsh_bands`) and slot agreement
+  (:func:`_agree_bp`) are one helper each.
 """
 
 from __future__ import annotations
@@ -455,37 +461,97 @@ def simhash_pairs(
 _MERSENNE31 = (1 << 31) - 1
 
 
-def _minhash_exprs(num_hashes: int) -> list[Column]:
-    """k permutation hashes h_i(s) = (a_i * x + b_i) mod M31 over the
-    31-bit base hash x = xxhash64(shingle) & 0x7FFFFFFF, with (a_i,
-    b_i) derived deterministically from the index. The 31-bit domain
-    keeps every intermediate < 2^62, so the arithmetic can never
-    overflow a signed long — required under Spark 4's default ANSI
-    mode, where silent wraparound is an error."""
-    exprs = []
-    x = F.col("xh").bitwiseAND(F.lit(0x7FFFFFFF))
-    for i in range(num_hashes):
-        # deterministic 'random' multipliers/offsets per index
-        a = (0x9E3779B9 * (i + 1)) % _MERSENNE31 | 1
-        b = (0xBF58476D * (i + 7)) % _MERSENNE31
-        exprs.append(
-            F.min(
-                F.pmod(
-                    F.lit(a).cast("long") * x + F.lit(b).cast("long"),
-                    F.lit(_MERSENNE31).cast("long"),
-                )
-            ).alias(f"mh{i}")
+def _minhash_params(num_hashes: int) -> list[tuple[int, int]]:
+    """The (a_i, b_i) permutation constants h_i(x) = (a_i·x + b_i) mod
+    M31, derived deterministically from the index — shared by the
+    signature kernel and the DuckDB ``*_oracle_sql`` twins, so both
+    engines hash with the SAME numbers."""
+    return [
+        (
+            (0x9E3779B9 * (i + 1)) % _MERSENNE31 | 1,
+            (0xBF58476D * (i + 7)) % _MERSENNE31,
         )
-    return exprs
+        for i in range(num_hashes)
+    ]
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 64
-) -> DataFrame:
-    """(doc, mh0..mh{k-1}) MinHash signature from n-token shingles."""
-    sh = _shingle_table(df, id_col, text_col, n)
-    xh = sh.select("doc", F.xxhash64(F.col("sh")).alias("xh"))
-    return xh.groupBy("doc").agg(*_minhash_exprs(num_hashes))
+def _minhash_sigs(xs: DataFrame, num_hashes: int) -> DataFrame:
+    """THE MinHash signature site: ``(doc, xs array<bigint>)`` — one row
+    per doc holding its shingles' base hashes — to ``(doc, sig
+    array<bigint>)`` with ``sig[i] = min over xs of (a_i·x + b_i) mod
+    M31``, x = base hash & 0x7FFFFFFF.
+
+    One mapInPandas NumPy kernel (NOTES #87): the 31-bit mask keeps
+    a_i·x + b_i below 2^63, so int64 arithmetic never wraps; each hash
+    is one vectorised pass over the batch's flattened list values and
+    ``np.minimum.reduceat`` over the list offsets takes the per-doc
+    minimum — O(shingles) memory per batch, not O(k·shingles). Docs
+    with an empty list produce no row, as an exploded groupBy would.
+    The base hash (Spark's xxhash64 or the md5 family) is a Spark
+    column the caller computes; the kernel never re-implements it."""
+    from pasta_pipeline_spark.operators.util import ensure_package_on_workers
+
+    ensure_package_on_workers(xs.sparkSession)
+    params = _minhash_params(num_hashes)
+    schema = f"doc {xs.schema['doc'].dataType.simpleString()}, sig array<bigint>"
+
+    def minhash_kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            lens = pdf["xs"].map(len).to_numpy()
+            keep = lens > 0
+            if not keep.any():
+                continue
+            x = np.concatenate(list(pdf["xs"][keep])).astype(np.int64) & 0x7FFFFFFF
+            starts = np.concatenate(([0], np.cumsum(lens[keep])[:-1]))
+            sig = np.empty((len(starts), num_hashes), dtype=np.int64)
+            for i, (a, b) in enumerate(params):
+                sig[:, i] = np.minimum.reduceat((a * x + b) % _MERSENNE31, starts)
+            yield pd.DataFrame({"doc": pdf["doc"].to_numpy()[keep], "sig": list(sig)})
+
+    return xs.select("doc", "xs").mapInPandas(minhash_kernel, schema)
+
+
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    if bands <= 0 or num_hashes % bands:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
+    return num_hashes // bands
+
+
+def _lsh_bands(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """THE banding step: ``(doc, sig)`` → ``(doc, band, bh)``, one row
+    per band, ``bh = xxhash64(sig[j·r], …, sig[j·r+r−1])`` for band j
+    of r = num_hashes/bands slots. Raises ValueError when ``bands``
+    does not divide ``num_hashes`` (trailing slots would go unbanded)."""
+    r = _rows_per_band(num_hashes, bands)
+    sig = F.col("sig")
+    bhs = [F.xxhash64(*[sig[j * r + i] for i in range(r)]) for j in range(bands)]
+    return sigs.select("doc", F.posexplode(F.array(*bhs)).alias("band", "bh"))
+
+
+def _agree_bp(sig_a: Column, sig_b: Column, num_hashes: int) -> Column:
+    """THE signature-agreement score: agreeing slots of two signatures
+    as integer basis points, ``agree · 10000 div k`` (the unbiased
+    Jaccard estimate, Broder 1997). The double quotient of two
+    non-negative integers below 2^53 never rounds across an integer,
+    so the cast floors exactly like SQL ``div``."""
+    agree = F.aggregate(
+        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    return (agree * F.lit(10000) / F.lit(num_hashes)).cast("long")
+
+
+def _join_sig_pair(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
+    """Attach both endpoints' signatures, as ``__sa`` / ``__sb``, to a
+    ``(doc_a, doc_b, …)`` pair frame (inner joins: a doc without a
+    signature drops its pairs)."""
+    return pairs.join(
+        sigs.select(F.col("doc").alias("doc_a"), F.col("sig").alias("__sa")), "doc_a"
+    ).join(sigs.select(F.col("doc").alias("doc_b"), F.col("sig").alias("__sb")), "doc_b")
 
 
 def minhash_lsh_pairs(
@@ -501,14 +567,17 @@ def minhash_lsh_pairs(
     """Near-dup pairs via banded MinHash-LSH, verified with exact
     Jaccard (tier 3) so the output contains no false positives:
 
-    1. signature: k min-hashes over shingles (one shuffle);
-    2. banding: hash each band of k/bands values → explode →
+    1. per-doc shingle sets: one groupBy (one shuffle) collects each
+       doc's sorted hashed shingles — the signature kernel
+       (:func:`_minhash_sigs`) and the verifier both read it;
+    2. banding: hash each band of k/bands signature slots → explode →
        bucket-join on (band, band_hash) → candidate pairs;
     3. verification: exact shingle-Jaccard on candidates only, filter
        by threshold.
 
     The band count tunes the S-curve: 64 hashes / 16 bands ≈ catches
-    J >= ~0.5 with high probability. False negatives are possible
+    J >= ~0.5 with high probability. ``bands`` must divide
+    ``num_hashes`` (ValueError otherwise). False negatives are possible
     (inherent to LSH); the oracle-checked contract is therefore
     "every returned pair truly has J >= threshold".
 
@@ -518,28 +587,14 @@ def minhash_lsh_pairs(
     """
     from pasta_pipeline_spark.operators.util import attach_cached_deps
 
-    rows_per_band = num_hashes // bands
     own_cache = shingle_table is None
-    sh = (
-        _shingle_table(df, id_col, text_col, n).persist()
-        if own_cache
-        else shingle_table
-    )
+    sh = _shingle_table(df, id_col, text_col, n) if own_cache else shingle_table
     # sh is already the 64-bit shingle hash (hashed shingle table)
-    xh = sh.select("doc", F.col("sh").alias("xh"))
-    sigs = xh.groupBy("doc").agg(*_minhash_exprs(num_hashes))
-    band_cols = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.xxhash64(
-                *[F.col(f"mh{bi * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("bh"),
-        )
-        for bi in range(bands)
-    ]
-    banded = sigs.select("doc", F.explode(F.array(*band_cols)).alias("b")).select(
-        "doc", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
+    sets = sh.groupBy("doc").agg(F.sort_array(F.collect_list("sh")).alias("shs"))
+    sigs = _minhash_sigs(sets.select("doc", F.col("shs").alias("xs")), num_hashes)
+    banded = _lsh_bands(sigs, num_hashes, bands)  # raises before anything is cached
+    if own_cache:
+        sh.persist()
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -565,7 +620,6 @@ def minhash_lsh_pairs(
     # set with corpus size, so an unconditional F.broadcast(cand) is a
     # driver-OOM risk at scale; AQE picks broadcast when the runtime
     # size is actually small.
-    sets = sh.groupBy("doc").agg(F.sort_array(F.collect_list("sh")).alias("shs"))
     n_common = F.size(F.array_intersect(F.col("__sa"), F.col("__sb"))).cast("long")
     from pasta_pipeline_spark.operators.util import pair_verify_parallelism
 
@@ -1483,16 +1537,12 @@ def winnowing_oracle_sql(
 # ---------------------------------------------------------------------------
 
 
-def _md5_minhash_params(num_hashes: int) -> list[tuple[int, int]]:
-    """The (a_i, b_i) permutation constants of :func:`_minhash_exprs`,
-    exposed so the SQL twin is generated from the SAME numbers."""
-    return [
-        (
-            (0x9E3779B9 * (i + 1)) % _MERSENNE31 | 1,
-            (0xBF58476D * (i + 7)) % _MERSENNE31,
-        )
-        for i in range(num_hashes)
-    ]
+def _md5_minhash_sigs(sh: DataFrame, num_hashes: int) -> DataFrame:
+    """(doc, sig) over an UNhashed (doc, sh) shingle table, base hash =
+    the engine-shared md5 :func:`_hash60` (the kernel masks it to 31
+    bits) — the family the audits below replay hash-exactly in SQL."""
+    xs = sh.groupBy("doc").agg(F.collect_list(_hash60(F.col("sh"))).alias("xs"))
+    return _minhash_sigs(xs, num_hashes)
 
 
 def minhash_error_report(
@@ -1516,31 +1566,14 @@ def minhash_error_report(
     so the whole report — signatures included — replays hash-exactly
     in SQL; the production pair tier keeps xxhash64 (faster, same
     set semantics). One shingle scan feeds both the exact-Jaccard
-    self-join and the signature aggregation.
+    self-join and the signature kernel; the estimate is
+    :func:`_agree_bp` over the two signature arrays.
 
     Returns per-pair ``(doc_a, doc_b, jaccard_bp, est_bp,
     abs_err_bp)`` in basis points (integer, playbook #12).
     """
     sh = _shingle_table(docs, id_col, text_col, n, hashed=False)
-    # 31-bit md5 base hash — engine-shared (the dsir hash_bucket idiom)
-    x = (
-        F.conv(F.substring(F.md5(F.col("sh").cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        .bitwiseAND(F.lit(0x7FFFFFFF))
-    )
-    xh = sh.select("doc", x.alias("x"))
-    params = _md5_minhash_params(num_hashes)
-    sigs = xh.groupBy("doc").agg(
-        *[
-            F.min(
-                F.pmod(
-                    F.lit(a).cast("long") * F.col("x") + F.lit(b).cast("long"),
-                    F.lit(_MERSENNE31).cast("long"),
-                )
-            ).alias(f"mh{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
+    sigs = _md5_minhash_sigs(sh, num_hashes)
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     sa = sh.select(F.col("doc").alias("doc_a"), "sh")
     sb = sh.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh2"))
@@ -1569,25 +1602,9 @@ def minhash_error_report(
             >= F.lit(t_bp) * (F.col("n_a") + F.col("n_b") - F.col("n_common"))
         )
     )
-    a_sig = sigs.select(
-        F.col("doc").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(num_hashes)],
-    )
-    b_sig = sigs.select(
-        F.col("doc").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(num_hashes)],
-    )
-    # integer div (matches the oracle's // — floor on positives)
-    match_sum = " + ".join(
-        f"cast(a{i} = b{i} as bigint)" for i in range(num_hashes)
-    )
     return (
-        exact.join(a_sig, "doc_a")
-        .join(b_sig, "doc_b")
-        .withColumn(
-            "est_bp",
-            F.expr(f"({match_sum}) * 10000 div {num_hashes}").cast("long"),
-        )
+        _join_sig_pair(exact, sigs)
+        .withColumn("est_bp", _agree_bp(F.col("__sa"), F.col("__sb"), num_hashes))
         .select(
             "doc_a",
             "doc_b",
@@ -1608,7 +1625,7 @@ def minhash_error_oracle_sql(
 ) -> str:
     """DuckDB twin of :func:`minhash_error_report` — signatures
     generated from the SAME (a_i, b_i) constants."""
-    params = _md5_minhash_params(num_hashes)
+    params = _minhash_params(num_hashes)
     t_bp = int(round(threshold * 10000))
     sig_cols = ",\n             ".join(
         f"MIN(({a} * x + {b}) % {_MERSENNE31}) AS mh{i}"
@@ -1682,14 +1699,15 @@ def minhash_gate_recall(
 
     Signatures here run the md5 hash family of
     :func:`minhash_error_report` (same 31-bit base hash, same
-    ``_md5_minhash_params`` permutation constants), so the WHOLE
+    ``_minhash_params`` permutation constants), so the WHOLE
     audit — shingling, signatures, banding, truth, recall — replays
-    hash-exactly in SQL. The banding recipe is the production one
-    (``num_hashes`` slots in ``num_bands`` bands, collision = all
-    ``num_hashes/num_bands`` slots of some band agree); only the slot
-    hash family differs, and :func:`minhash_error_report` measures
-    that family's estimator error directly, so the two audits bracket
-    the production gate.
+    hash-exactly in SQL. The banding is the production helper
+    (:func:`_lsh_bands`: ``num_hashes`` slots in ``num_bands`` bands,
+    collision = equal xxhash64 of some band's slots, i.e. all its
+    slots agree; ValueError unless ``num_bands`` divides
+    ``num_hashes``); only the slot hash family differs, and
+    :func:`minhash_error_report` measures that family's estimator
+    error directly, so the two audits bracket the production gate.
 
     Ground truth is exact shingle Jaccard >= ``threshold`` on the
     md5-ranked ``max_n`` subsample (the gate_recall_report trick —
@@ -1700,56 +1718,17 @@ def minhash_gate_recall(
     recall_sc)``, recall_sc = floor(gated/true · recall_scale), NULL
     when the subsample holds no true pair.
     """
-    rows_per_band = num_hashes // num_bands
-    if rows_per_band * num_bands != num_hashes:
-        raise ValueError("num_bands must divide num_hashes")
     sh = _shingle_table(docs, id_col, text_col, n, hashed=False)
-    x = (
-        F.conv(F.substring(F.md5(F.col("sh").cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        .bitwiseAND(F.lit(0x7FFFFFFF))
-    )
-    xh = sh.select("doc", x.alias("x"))
-    params = _md5_minhash_params(num_hashes)
-    sigs = xh.groupBy("doc").agg(
-        *[
-            F.min(
-                F.pmod(
-                    F.lit(a).cast("long") * F.col("x") + F.lit(b).cast("long"),
-                    F.lit(_MERSENNE31).cast("long"),
-                )
-            ).alias(f"mh{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
-    # production banding over the FULL corpus: 16 slim (doc, band, key)
-    # rows per doc, equi-join on (band, key) — never an all-pairs frame
-    bandrows = sigs.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"mh{j * rows_per_band + r}").cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("key"),
-                    )
-                    for j in range(num_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    sigs = _md5_minhash_sigs(sh, num_hashes)
+    # production banding over the FULL corpus: 16 slim (doc, band, bh)
+    # rows per doc, equi-join on (band, bh) — never an all-pairs frame
+    bandrows = _lsh_bands(sigs, num_hashes, num_bands)
     cand = (
         bandrows.alias("a")
         .join(
             bandrows.alias("b"),
             (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.bh") == F.col("b.bh"))
             & (F.col("a.doc") < F.col("b.doc")),
         )
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
@@ -1917,31 +1896,13 @@ def planted_minhash_recall(
     pair. Signatures run the md5 family (same constants as
     :func:`minhash_error_report`) so the WHOLE audit replays in SQL.
     """
-    rows_per_band = num_hashes // num_bands
-    if rows_per_band * num_bands != num_hashes:
-        raise ValueError("num_bands must divide num_hashes")
+    r = _rows_per_band(num_hashes, num_bands)
     planted = plant_near_dup_texts(
         docs, id_col=id_col, text_col=text_col,
         rate_mod=rate_mod, drop_mods=drop_mods, id_offset=id_offset,
     )
     sh = _shingle_table(planted, id_col, text_col, n, hashed=False)
-    x = (
-        F.conv(F.substring(F.md5(F.col("sh").cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        .bitwiseAND(F.lit(0x7FFFFFFF))
-    )
-    params = _md5_minhash_params(num_hashes)
-    sigs = sh.select("doc", x.alias("x")).groupBy("doc").agg(
-        *[
-            F.min(
-                F.pmod(
-                    F.lit(a).cast("long") * F.col("x") + F.lit(b).cast("long"),
-                    F.lit(_MERSENNE31).cast("long"),
-                )
-            ).alias(f"mh{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
+    sigs = _md5_minhash_sigs(sh, num_hashes)
     # planted pair frame: (doc_a=base, doc_b=twin, drop_mod)
     n_m = len(drop_mods)
     pick = (F.col(id_col) % F.lit(rate_mod * n_m)) / F.lit(rate_mod)
@@ -1985,28 +1946,13 @@ def planted_minhash_recall(
             ).cast("int"),
         )
     )
-    # banding collision on the planted pairs: any band where all slots
-    # agree (slim — one sig join per side of the pair frame)
-    a_sig = sigs.select(
-        F.col("doc").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(num_hashes)],
+    # banding collision on the planted pairs: any band whose r-slot
+    # slices agree (slim — one sig join per side of the pair frame)
+    band_hit = F.exists(
+        F.sequence(F.lit(0), F.lit(num_bands - 1)),
+        lambda j: F.slice("__sa", j * r + 1, r) == F.slice("__sb", j * r + 1, r),
     )
-    b_sig = sigs.select(
-        F.col("doc").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(num_hashes)],
-    )
-    band_hit = None
-    for j in range(num_bands):
-        cond = F.lit(True)
-        for r in range(rows_per_band):
-            k = j * rows_per_band + r
-            cond = cond & (F.col(f"a{k}") == F.col(f"b{k}"))
-        band_hit = cond if band_hit is None else (band_hit | cond)
-    gated = (
-        jac.join(a_sig, "doc_a")
-        .join(b_sig, "doc_b")
-        .withColumn("is_gated", band_hit.cast("int"))
-    )
+    gated = _join_sig_pair(jac, sigs).withColumn("is_gated", band_hit.cast("int"))
     return (
         gated.groupBy("drop_mod")
         .agg(
@@ -2049,7 +1995,7 @@ def planted_minhash_recall_oracle_sql(
     construction (same tokenization, same markers), md5-family
     signatures, banding as an OR-of-bands predicate, exact-Jaccard
     truth on the planted pairs, per-band recall."""
-    params = _md5_minhash_params(num_hashes)
+    params = _minhash_params(num_hashes)
     rows_per_band = num_hashes // num_bands
     t_bp = int(round(threshold * 10000))
     n_m = len(drop_mods)
@@ -2167,7 +2113,7 @@ def minhash_gate_recall_oracle_sql(
     """DuckDB twin of :func:`minhash_gate_recall` — signatures from
     the SAME permutation constants; the banding equi-join is replayed
     as an OR-of-bands pair predicate (identical pair set)."""
-    params = _md5_minhash_params(num_hashes)
+    params = _minhash_params(num_hashes)
     rows_per_band = num_hashes // num_bands
     t_bp = int(round(threshold * 10000))
     sig_cols = ",\n             ".join(

@@ -41,28 +41,6 @@ def dedup_stream(
 # ---------------------------------------------------------------------------
 
 
-def _bands_from_sigs(sigs: "DataFrame", num_hashes: int, bands: int) -> "DataFrame":
-    """(doc, band, bh) band-bucket table derived from a signature
-    frame (doc, mh0..mh{k-1}) — banding is a projection, so only the
-    compact signatures ever persist; buckets are recomputed per batch
-    at projection cost."""
-    from pyspark.sql import functions as F
-
-    rows_per_band = num_hashes // bands
-    band_cols = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.xxhash64(
-                *[F.col(f"mh{bi * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("bh"),
-        )
-        for bi in range(bands)
-    ]
-    return sigs.select("doc", F.explode(F.array(*band_cols)).alias("b")).select(
-        "doc", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-
-
 def lsh_index_batch(
     batch: "DataFrame",
     index_store,
@@ -81,13 +59,20 @@ def lsh_index_batch(
     fold the batch into the index. Returns the detected pair frame
     ``(doc_a, doc_b, agree_fp)``.
 
-    Index state = the per-doc MinHash signature table (k int64s per
-    document — compact enough to keep forever; band buckets derive
-    from it by projection). Candidate generation joins the batch's
-    band buckets against the index's; scoring is the signature
+    Index state = the per-doc MinHash signature table ``(doc, sig
+    array<bigint>, __bkt)`` — k int64s per document in one column,
+    compact enough to keep forever; band buckets derive from it by
+    projection. Signatures, banding and scoring are the batch tier's
+    shared helpers (operators/text_dedup.py: the one signature kernel,
+    ``_lsh_bands``, ``_agree_bp``). Candidate generation joins the
+    batch's band buckets against the index's; scoring is the signature
     agreement fraction (the standard unbiased Jaccard estimator —
     agree/k), surfaced as exact integer basis points
-    ``agree * 10000 div k``. Exact shingle-level verification of the
+    ``agree * 10000 div k``. ``bands`` must divide ``num_hashes``
+    (ValueError otherwise, raised before the index is touched). A
+    NULL- or empty-text doc signs the one whole-text shingle ``""``
+    (operators/text_dedup.py ``shingles``), so it is indexed and pairs
+    only with other such docs. Exact shingle-level verification of the
     emitted pairs is a downstream batch job (operators/text_dedup.py
     jaccard machinery) — the streaming path never needs old documents'
     TEXT, only their signatures, which is what makes the state small.
@@ -112,20 +97,25 @@ def lsh_index_batch(
     from pyspark.sql import functions as F
 
     from pasta_pipeline_spark.operators.text_dedup import (
-        _minhash_exprs,
+        _agree_bp,
+        _join_sig_pair,
+        _lsh_bands,
+        _minhash_sigs,
         _shingle_table,
     )
 
-    sh = _shingle_table(batch, id_col, text_col, n).persist()
-    xh = sh.select("doc", F.col("sh").alias("xh"))
-    sigs_new = xh.groupBy("doc").agg(*_minhash_exprs(num_hashes)).persist()
-
+    sh = _shingle_table(batch, id_col, text_col, n)
+    # collect_list, not a set: a doc repeated within the batch signs
+    # the union of its rows' shingles
+    xs = sh.groupBy("doc").agg(F.collect_list("sh").alias("xs"))
+    sigs_new = _minhash_sigs(xs, num_hashes)
     if index_store.exists():
         sigs_old = index_store.read().drop("__bkt")
     else:
         sigs_old = batch.sparkSession.createDataFrame([], sigs_new.schema)
-    banded_new = _bands_from_sigs(sigs_new, num_hashes, bands)
-    banded_old = _bands_from_sigs(sigs_old, num_hashes, bands)
+    banded_new = _lsh_bands(sigs_new, num_hashes, bands)
+    banded_old = _lsh_bands(sigs_old, num_hashes, bands)
+    sigs_new.persist()  # after banding: a bad ``bands`` raises before anything is cached
 
     # cross (new vs indexed) + within-batch candidates, doc_a < doc_b
     a, b = banded_new.alias("a"), banded_old.alias("b")
@@ -148,20 +138,12 @@ def lsh_index_batch(
     cand = cross.union(within).distinct()
 
     all_sigs = sigs_old.unionByName(sigs_new).dropDuplicates(["doc"])
-    agree = None
-    for i in range(num_hashes):
-        t = F.when(F.col(f"a.mh{i}") == F.col(f"b.mh{i}"), 1).otherwise(0)
-        agree = t if agree is None else agree + t
-    sa, sb = all_sigs.alias("a"), all_sigs.alias("b")
     pairs = (
-        cand.join(sa, cand["doc_a"] == F.col("a.doc"))
-        .join(sb, cand["doc_b"] == F.col("b.doc"))
+        _join_sig_pair(cand, all_sigs)
         .select(
             "doc_a",
             "doc_b",
-            (agree * F.lit(10000) / F.lit(num_hashes))
-            .cast("long")
-            .alias("agree_fp"),
+            _agree_bp(F.col("__sa"), F.col("__sb"), num_hashes).alias("agree_fp"),
         )
         .filter(F.col("agree_fp") >= int(min_agree_frac * 10000))
     )
@@ -183,7 +165,6 @@ def lsh_index_batch(
             # key their TTL windows on it
             to_write = pairs.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
         to_write.write.mode("append").parquet(pairs_dir)
-    sh.unpersist()
     sigs_new.unpersist()
     return pairs
 
@@ -192,13 +173,13 @@ def compact_lsh_index(index_store, index_buckets: int = 32) -> None:
     """Periodic maintenance for the signature store ``lsh_index_batch``
     accretes into: every micro-batch merge adds one file per touched
     ``__bkt`` partition, so after months of batches the store is
-    thousands of tiny files even though the DATA is compact (k int64s
-    per doc). One compaction pass rewrites the live version to ~one
-    file per bucket partition, preserving the ``__bkt`` layout so the
-    NEXT merge is still differential. Run it on a cadence (every N
-    batches / nightly), exactly like a lakehouse OPTIMIZE; detection
-    results are unaffected — the store's contents don't change, only
-    the file count."""
+    thousands of tiny files even though the DATA is compact (one
+    k-int64 ``sig`` array per doc). One compaction pass rewrites the
+    live version to ~one file per bucket partition, preserving the
+    ``__bkt`` layout so the NEXT merge is still differential. Run it
+    on a cadence (every N batches / nightly), exactly like a lakehouse
+    OPTIMIZE; detection results are unaffected — the store's contents
+    don't change, only the file count."""
     index_store.compact(index_buckets, partition_by="__bkt")
 
 

@@ -78,6 +78,24 @@ def test_minhash_verification_no_unconditional_broadcast(spark):
     assert "ResolvedHint" not in analyzed, "unconditional broadcast hint in minhash plan"
 
 
+def test_minhash_is_one_python_kernel_not_min_aggregates(spark):
+    """Signatures come from ONE Python map kernel (the same UDF on each
+    side of the band self-join), never from the k-``min`` aggregate it
+    replaced — so the 64-column path cannot creep back."""
+    import re
+
+    plan = _plan(spark, "minhash_lsh_pairs")
+    blocks = plan.split("\n\n")
+    maps = [b for b in blocks if re.match(r"\(\d+\) MapInPandas\b", b)]
+    udfs = {m for b in maps for m in re.findall(r"Arguments: (\w+\(.*?\)#\d+)", b)}
+    assert maps, "no Python map node in the minhash plan"
+    assert len({re.sub(r"\(.*\)", "", u) for u in udfs}) == 1, udfs
+    assert all(u.startswith("minhash_kernel(") for u in udfs), udfs
+    aggs = [b for b in blocks if re.match(r"\(\d+\) (Object)?HashAggregate\b", b)]
+    assert aggs
+    assert all(b.count("min(") < 64 for b in aggs), "64-min signature aggregate is back"
+
+
 def test_cosine_dup_pairs_is_bucket_gated(spark):
     """The registered near-dup query must be the LSH-bucketed form:
     the pair join carries the bucket-equality key (a hash-partitionable

@@ -178,12 +178,42 @@ def test_minhash_gate_recall_floor(spark):
     assert row.recall_sc >= 850_000, row
 
 
-def test_minhash_gate_recall_bad_bands_raises(spark):
-    from pasta_pipeline_spark.operators.text_dedup import minhash_gate_recall
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "minhash_gate_recall",
+        "planted_minhash_recall",
+        "minhash_lsh_pairs",
+        "lsh_index_batch",
+    ],
+)
+def test_minhash_gate_recall_bad_bands_raises(spark, tmp_table_dir, entry):
+    """64 hashes in 10 bands would leave the trailing 4 slots unbanded:
+    every banded-MinHash entry point refuses it when the plan is built,
+    and the streaming index is never written."""
+    from pasta_pipeline_spark.operators import text_dedup as td
+    from pasta_pipeline_spark.sources.tables import TableStore
+    from pasta_pipeline_spark.streaming.dedup import lsh_index_batch
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
+    store = TableStore(spark, f"{tmp_table_dir}/lsh")
+    calls = {
+        "minhash_gate_recall": lambda: td.minhash_gate_recall(
+            docs, num_hashes=64, num_bands=10
+        ),
+        "planted_minhash_recall": lambda: td.planted_minhash_recall(
+            docs, num_hashes=64, num_bands=10
+        ),
+        "minhash_lsh_pairs": lambda: td.minhash_lsh_pairs(
+            docs, "doc_id", "text", num_hashes=64, bands=10
+        ),
+        "lsh_index_batch": lambda: lsh_index_batch(
+            docs, store, num_hashes=64, bands=10
+        ),
+    }
     with pytest.raises(ValueError):
-        minhash_gate_recall(docs, num_hashes=64, num_bands=10)
+        calls[entry]()
+    assert not store.exists()
 
 
 # ---- planted text twins (wave 37) ----

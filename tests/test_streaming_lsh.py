@@ -45,6 +45,34 @@ def test_lsh_index_batch_redelivery_is_noop_on_index(spark, tmp_table_dir):
     assert pairs == []
 
 
+def test_docs_without_tokens_sign_the_empty_shingle(spark, tmp_table_dir):
+    """A NULL-text and an empty-text doc both have no tokens, so each
+    keeps the one whole-text shingle "" (shorter-than-n docs stay
+    comparable, as perfbench/models.py ``shingle_set`` models): both
+    are indexed, they pair with each other at full agreement and with
+    no real-text doc — in the streaming index and in the batch tier
+    alike. The index stores one ``sig`` array per doc."""
+    from pasta_pipeline_spark.operators.text_dedup import minhash_lsh_pairs
+
+    batch = spark.createDataFrame(
+        [(1, TEXT_A), (2, TEXT_B), (3, None), (4, "")], "doc_id long, text string"
+    )
+    store = TableStore(spark, f"{tmp_table_dir}/empty")
+    got = {
+        (r["doc_a"], r["doc_b"]): r["agree_fp"]
+        for r in lsh_index_batch(batch, store).collect()
+    }
+    assert got == {(3, 4): 10000}
+    idx = store.read()
+    assert idx.columns == ["doc", "sig", "__bkt"]
+    assert idx.schema["sig"].dataType.simpleString() == "array<bigint>"
+    assert sorted(r["doc"] for r in idx.collect()) == [1, 2, 3, 4]
+    assert all(len(r["sig"]) == 64 for r in idx.collect())
+
+    pairs = minhash_lsh_pairs(batch, "doc_id", "text", threshold=0.0).collect()
+    assert {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs} == {(3, 4): 1.0}
+
+
 def test_lsh_index_compaction_bounds_files_and_preserves_detection(spark, tmp_table_dir):
     """After N micro-batches the signature store has accreted files per
     touched bucket per batch; compact_lsh_index rewrites to ~one file
