@@ -14,7 +14,8 @@ version dir, hardlinked copies of any carried partitions join it, and a
 ``_MANIFEST.json`` records the snapshot — the written frame's schema as
 a DDL string (partition columns last, as a partitioned read returns
 them) and each partition dir's data files. Only then does
-the pointer flip via write-temp + os.replace (atomic on POSIX). Readers
+the pointer flip via ``atomic_write`` (write-temp, fsync, os.replace,
+fsync the dir — atomic and durable on POSIX). Readers
 resolve the pointer, then read an immutable, self-contained dir with the
 recorded schema, so a read never infers a type and never runs a Spark
 job; a crash mid-write never corrupts the live table and a crash
@@ -50,6 +51,27 @@ def _data_files(root: str) -> list[str]:
         for name in names
         if not name.startswith(("_", "."))
     )
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` so that a crash at any point
+    leaves the old content or the new one: write a temp file, flush and
+    fsync it, ``os.replace`` it over ``path``, then fsync the directory
+    so the rename itself is durable. Without the file fsync a crash soon
+    after the rename can leave ``path`` empty — for the version pointer
+    that reads as "no table", and the next commit's GC would then delete
+    every other version."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:6]}"
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    fd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def _link_or_copy(src: str, dst: str) -> None:
@@ -195,10 +217,7 @@ class TableStore:
         write and its flip are reclaimed."""
         old = self.current_version()
         os.makedirs(self.path, exist_ok=True)
-        tmp = self._pointer_path() + f".tmp-{uuid.uuid4().hex[:6]}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(version)
-        os.replace(tmp, self._pointer_path())  # atomic flip
+        atomic_write(self._pointer_path(), version)
         if gc:
             for entry in self.versions():
                 if entry not in (version, old):

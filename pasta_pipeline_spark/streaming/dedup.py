@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from pasta_pipeline_spark.streaming.exactly_once import start_foreach_batch
+
 
 def dedup_stream(
     df: DataFrame,
@@ -198,25 +200,12 @@ def incremental_lsh_dedup(
     pairs append to ``pairs_dir`` as parquet. The index survives
     restarts (TableStore versioning) and replayed batches are no-ops
     (doc-keyed merge; a doc never pairs with itself)."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_lsh_dedup requires checkpoint_dir")
-
-    def step(batch: "DataFrame", batch_id: int) -> None:
-        lsh_index_batch(
-            batch,
-            index_store,
-            pairs_dir=pairs_dir,
-            batch_id=batch_id,
-            id_col=id_col,
-            text_col=text_col,
-            **lsh_kwargs,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    # lsh_index_batch is looked up when each batch runs, not bound here
+    return start_foreach_batch(
+        stream,
+        lambda b, i: lsh_index_batch(
+            b, index_store, pairs_dir=pairs_dir, batch_id=i,
+            id_col=id_col, text_col=text_col, **lsh_kwargs,
+        ),
+        checkpoint_dir, trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

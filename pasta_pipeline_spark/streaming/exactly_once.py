@@ -1,5 +1,4 @@
-"""Exactly-once guard for ``foreachBatch`` steps that combine
-side-effecting writes (parquet appends, TableStore merges).
+"""Exactly-once guard for the ``foreachBatch`` sinks of this package.
 
 Structured Streaming's ``foreachBatch`` body runs AT-LEAST-ONCE: a
 micro-batch whose step crashes midway (or completes but dies before
@@ -10,28 +9,39 @@ whatever completed before the crash. Checkpointing alone does NOT
 prevent this: the checkpoint only dedups across *committed* batches,
 never within a retried one.
 
-Two mechanisms restore idempotence, used together by the sinks in
-this package:
+Every sink starts through :func:`start_foreach_batch` (the one
+checkpoint check and query start), and each sink restores idempotence
+by one of three mechanisms:
 
-1. **Append → partition overwrite.** Every appended frame is stamped
-   with the micro-batch id and written with
-   ``mode("overwrite")`` + ``partitionOverwriteMode=dynamic``
-   partitioned by ``__mb`` — a retry REPLACES the batch's own
-   partition instead of re-appending (the same INSERT OVERWRITE
-   idiom a lakehouse job uses for reruns).
+1. **Keyed last-writer-wins upsert** (``foreach_batch_merge``,
+   ``foreach_batch_merge_partitioned``, ``incremental_frontier_sink``,
+   ``incremental_lsh_dedup``'s signature index): re-merging the same
+   keyed rows is a no-op, so a rerun needs no guard. (The LSH sink's
+   pair history is a plain append: a rerun appends its pairs again,
+   for a keyed dedup downstream.)
 
-2. **State merges → pre-version pinning** (this module). Before the
-   first state mutation, the step records ``{batch_id → the current
-   version of every state table}`` in a marker file (atomic
-   tmp+rename). All reads that feed the batch's computation use the
-   PINNED versions (TableStore time travel — the predecessor of
-   every commit is GC-retained), so a retry recomputes byte-identical
-   updates even when some merges already landed; re-merging identical
-   keyed rows is then a no-op by LWW-upsert semantics, and the
-   overwrite-by-``__mb`` appends are replaced wholesale.
+2. **State merges → pre-version pinning** (:class:`MicroBatchPin`):
+   every other stateful sink in ``sink.py``, plus
+   ``incremental_linkage_sink`` and ``pair_lifecycle_sink``, runs its
+   batch through ``sink.apply_state_batch``. Before the first state
+   mutation it records ``{batch_id → the current version of every
+   state table}`` in a marker file. All reads that feed the batch's
+   computation use the PINNED versions (TableStore time travel — the
+   predecessor of every commit is GC-retained), so a retry recomputes
+   byte-identical updates even when some merges already landed;
+   re-merging identical keyed rows is then a no-op.
 
-The marker is one tiny JSON per sink (driver-side, same durability
-class as the TableStore version pointer). Only the latest batch is
+3. **Append → partition overwrite** (:func:`overwrite_by_batch`):
+   every appended frame is stamped with the micro-batch id and written
+   with ``mode("overwrite")`` + ``partitionOverwriteMode=dynamic``
+   partitioned by that id — a retry REPLACES the batch's own
+   partition instead of re-appending (the INSERT OVERWRITE idiom a
+   lakehouse job uses for reruns). ``pair_lifecycle_sink``'s delta
+   and stats logs and ``expectations_gated_merge_sink``'s quarantine
+   (partitioned by ``__batch_id``) are written this way.
+
+The marker is one tiny JSON per sink, written with the same atomic
+write as the TableStore version pointer. Only the latest batch is
 retained — Structured Streaming never retries anything older than
 the last uncommitted batch.
 """
@@ -40,6 +50,40 @@ from __future__ import annotations
 
 import json
 import os
+
+from pasta_pipeline_spark.sources.tables import atomic_write
+
+
+def start_foreach_batch(
+    stream, step, checkpoint_dir: str, trigger_once: bool = True, upsert: bool = False
+):
+    """Start ``step(batch, batch_id)`` as a ``foreachBatch`` query and
+    return the StreamingQuery (caller awaits/stops). ``trigger_once``
+    processes what is available now, then stops.
+
+    Output mode: ``update`` when the step is a keyed last-writer-wins
+    upsert (``upsert=True``) — an aggregated input re-emits its changed
+    rows each batch, and upserting them again is what the sink is for.
+    ``append`` for every step that accumulates: in ``update`` mode the
+    re-emitted rows of an aggregated input would be added a second
+    time; in ``append`` mode Spark refuses an aggregated input without
+    a watermark at start, and emits each finalized row once with one.
+
+    ``checkpoint_dir`` is required: without offset tracking a restart
+    replays from scratch, and pinned sinks keep their marker there."""
+    if not checkpoint_dir:
+        raise ValueError(
+            "a foreachBatch sink requires checkpoint_dir: offset tracking "
+            "is what makes the sink exactly-once"
+        )
+    writer = (
+        stream.writeStream.outputMode("update" if upsert else "append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(step)
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 class MicroBatchPin:
@@ -60,10 +104,7 @@ class MicroBatchPin:
 
     def _write(self, doc: dict) -> None:
         os.makedirs(os.path.dirname(self.marker_path), exist_ok=True)
-        tmp = self.marker_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self.marker_path)
+        atomic_write(self.marker_path, json.dumps(doc))
 
     def pre_versions(self, batch_id: int, stores: dict) -> dict:
         """Versions of ``stores`` (name → TableStore) as of the START
@@ -78,17 +119,17 @@ class MicroBatchPin:
         return pre
 
 
-def overwrite_by_batch(df, batch_id: int, path: str) -> None:
-    """Idempotent micro-batch append: stamp ``__mb`` and INSERT
-    OVERWRITE only that partition, so a retried batch replaces its own
-    rows. Readers select their data columns explicitly and never see
-    ``__mb`` unless they ask for it."""
+def overwrite_by_batch(df, batch_id: int, path: str, col: str = "__mb") -> None:
+    """Idempotent micro-batch append: stamp ``col`` with the batch id
+    and INSERT OVERWRITE only that partition, so a retried batch
+    replaces its own rows. Readers select their data columns explicitly
+    and never see ``col`` unless they ask for it."""
     from pyspark.sql import functions as F
 
     (
-        df.withColumn("__mb", F.lit(int(batch_id)))
+        df.withColumn(col, F.lit(int(batch_id)))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__mb")
+        .partitionBy(col)
         .parquet(path)
     )

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pasta_pipeline_spark.plans.frontier import admit_discoveries, frontier_workload
+from pasta_pipeline_spark.streaming.exactly_once import start_foreach_batch
 
 
 def incremental_frontier_sink(
@@ -54,8 +55,6 @@ def incremental_frontier_sink(
     are static frames — refresh them between runs; for continuously
     completed fetches, anti-join again at read time via
     :func:`frontier_from_state`'s ``processed`` parameter."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_frontier_sink requires checkpoint_dir")
 
     def step(batch: DataFrame, _mb_id: int) -> None:
         fresh = admit_discoveries(batch, robots_rules, processed, agent=agent)
@@ -66,14 +65,7 @@ def incremental_frontier_sink(
             return
         state_store.merge_partitioned(updates, key="url", partition_col="__bkt")
 
-    writer = (
-        sitemap_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(sitemap_stream, step, checkpoint_dir, trigger_once, upsert=True)
 
 
 def frontier_from_state(

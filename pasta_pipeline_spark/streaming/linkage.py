@@ -26,7 +26,7 @@ equal the batch operators applied to the union of everything ingested
 
 Exactly-once: both state tables are derived deterministically from the
 batch rows plus the PRE-batch versions pinned by
-``streaming/exactly_once.MicroBatchPin``, and each apply commits full
+``streaming/sink.apply_state_batch``, and each apply commits full
 new versions — a retried micro-batch recomputes byte-identical tables
 and overwrites, never double-applies. The pairs table is written first
 so its reads of the pinned parts version materialize before the parts
@@ -60,7 +60,8 @@ from pasta_pipeline_spark.operators.linkage import (
     prefixed_link_side,
 )
 from pasta_pipeline_spark.sources.tables import TableStore
-from pasta_pipeline_spark.streaming.exactly_once import MicroBatchPin
+from pasta_pipeline_spark.streaming.exactly_once import start_foreach_batch
+from pasta_pipeline_spark.streaming.sink import State, apply_state_batch
 
 
 def apply_linkage_batch(
@@ -87,61 +88,62 @@ def apply_linkage_batch(
        pairs — stale pairs of re-ingested keys drop out here.
     4. parts_store := merged records.
     """
-    pin = MicroBatchPin(marker_path)
-    pre = pin.pre_versions(batch_id, {"parts": parts_store, "pairs": pairs_store})
-
     cols = PART_LINK_COLS
-    w = Window.partitionBy("p_partkey").orderBy(*[F.col(c) for c in cols[1:]])
-    b = (
-        batch.select(*cols)
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    keys = b.select("p_partkey").distinct()
 
-    if pre["parts"] is not None:
-        prev_parts = parts_store.read(version=pre["parts"]).select(*cols)
-        all_parts = prev_parts.join(keys, "p_partkey", "left_anti").unionByName(b)
-    else:
+    def deltas(batch: DataFrame, prior: dict) -> dict:
+        w = Window.partitionBy("p_partkey").orderBy(*[F.col(c) for c in cols[1:]])
+        b = (
+            batch.select(*cols)
+            .withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+        keys = b.select("p_partkey").distinct()
+
         all_parts = b
+        if prior["parts"] is not None:
+            all_parts = (
+                prior["parts"].select(*cols).join(keys, "p_partkey", "left_anti").unionByName(b)
+            )
 
-    # batch side vs the full merged state, blocked — candidates where
-    # at least one endpoint is a batch record; batch-batch pairs appear
-    # in both orientations and collapse in the normalized distinct
-    a = prefixed_link_side(b, "a")
-    s = prefixed_link_side(all_parts, "b")
-    j = a.join(
-        s,
-        (F.col("a_noun") == F.col("b_noun"))
-        & (F.col("a_p_brand") == F.col("b_p_brand"))
-        & (F.col("a_p_partkey") != F.col("b_p_partkey")),
-    )
-    score = agreement_score("a", "b", max_adj_lev, size_tol, price_tol)
-    new_pairs = (
-        j.select(
-            F.least(F.col("a_p_partkey"), F.col("b_p_partkey")).alias("a_key"),
-            F.greatest(F.col("a_p_partkey"), F.col("b_p_partkey")).alias("b_key"),
-            score.cast("long").alias("score"),
+        # batch side vs the full merged state, blocked — candidates where
+        # at least one endpoint is a batch record; batch-batch pairs appear
+        # in both orientations and collapse in the normalized distinct
+        a = prefixed_link_side(b, "a")
+        s = prefixed_link_side(all_parts, "b")
+        j = a.join(
+            s,
+            (F.col("a_noun") == F.col("b_noun"))
+            & (F.col("a_p_brand") == F.col("b_p_brand"))
+            & (F.col("a_p_partkey") != F.col("b_p_partkey")),
         )
-        .where(F.col("score") >= min_score)
-        .distinct()
-    )
-    if pre["pairs"] is not None:
-        kept = (
-            pairs_store.read(version=pre["pairs"])
-            .select("a_key", "b_key", "score")
-            .join(keys.withColumnRenamed("p_partkey", "a_key"), "a_key", "left_anti")
-            .join(keys.withColumnRenamed("p_partkey", "b_key"), "b_key", "left_anti")
+        score = agreement_score("a", "b", max_adj_lev, size_tol, price_tol)
+        out_pairs = (
+            j.select(
+                F.least(F.col("a_p_partkey"), F.col("b_p_partkey")).alias("a_key"),
+                F.greatest(F.col("a_p_partkey"), F.col("b_p_partkey")).alias("b_key"),
+                score.cast("long").alias("score"),
+            )
+            .where(F.col("score") >= min_score)
+            .distinct()
         )
-        out_pairs = kept.unionByName(new_pairs)
-    else:
-        out_pairs = new_pairs
+        if prior["pairs"] is not None:
+            kept = (
+                prior["pairs"]
+                .select("a_key", "b_key", "score")
+                .join(keys.withColumnRenamed("p_partkey", "a_key"), "a_key", "left_anti")
+                .join(keys.withColumnRenamed("p_partkey", "b_key"), "b_key", "left_anti")
+            )
+            out_pairs = kept.unionByName(out_pairs)
+        return {"pairs": out_pairs, "parts": all_parts}
 
     # pairs first: its plan reads the PINNED parts version, which the
     # parts overwrite below may garbage-collect
-    pairs_store.overwrite(out_pairs)
-    parts_store.overwrite(all_parts)
+    apply_state_batch(
+        batch, batch_id, marker_path,
+        {"pairs": State(pairs_store), "parts": State(parts_store)},
+        deltas,
+    )
 
 
 def incremental_linkage_sink(
@@ -156,27 +158,14 @@ def incremental_linkage_sink(
     stream of part records. Query with
     :func:`entity_resolution_from_state` /
     :func:`golden_records_from_state` at any time."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_linkage_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_linkage_batch(
-            batch,
-            batch_id,
-            parts_store,
-            pairs_store,
-            marker_path=os.path.join(checkpoint_dir, "_linkage_mb.json"),
-            **link_kwargs,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return start_foreach_batch(
+        stream,
+        lambda b, i: apply_linkage_batch(
+            b, i, parts_store, pairs_store,
+            marker_path=os.path.join(checkpoint_dir, "_linkage_mb.json"), **link_kwargs,
+        ),
+        checkpoint_dir, trigger_once, upsert=True,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def entity_resolution_from_state(pairs_store: TableStore) -> DataFrame:

@@ -45,6 +45,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pasta_pipeline_spark.streaming.exactly_once import start_foreach_batch
+from pasta_pipeline_spark.streaming.sink import State, apply_state_batch
+
 
 def _merge_islands(all_islands):
     """Fold a sorted array of (s, e) intervals (TTL-extended alive
@@ -98,8 +101,6 @@ def pair_lifecycle_sink(
     rescanned."""
     if ttl < 1:
         raise ValueError("ttl must be >= 1")
-    if not checkpoint_dir:
-        raise ValueError("pair_lifecycle_sink requires checkpoint_dir")
 
     def step(batch: DataFrame, _mb_id: int) -> None:
         apply_lifecycle_batch(
@@ -108,14 +109,7 @@ def pair_lifecycle_sink(
             n_buckets=n_buckets,
         )
 
-    writer = (
-        pairs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(pairs_stream, step, checkpoint_dir, trigger_once)
 
 
 def apply_lifecycle_batch(
@@ -133,16 +127,29 @@ def apply_lifecycle_batch(
     body, module-level so tests can drive a simulated intra-batch
     retry (same ``_mb_id`` twice). Idempotent under re-execution: see
     the module notes and streaming/exactly_once.py."""
+    apply_state_batch(
+        batch, _mb_id, f"{aux_dir}/_pair_lifecycle_mb.json",
+        {"state": State(
+            state_store, keys=["a", "b"],
+            bucket=F.pmod(F.xxhash64(F.col("a"), F.col("b")), F.lit(n_buckets)),
+        )},
+        lambda b, pinned: _lifecycle_deltas(
+            b, pinned["state"], _mb_id, aux_dir, ttl, a_col, b_col, batch_col
+        ),
+    )
+
+
+def _lifecycle_deltas(batch, pinned, _mb_id, aux_dir, ttl, a_col, b_col, batch_col) -> dict:
+    """The lifecycle step against the state ``pinned`` at the batch's
+    start: writes the closed-island deltas and the batch stats (each
+    overwriting its own ``__mb`` partition) and returns the state
+    updates; nothing for an empty batch."""
     from pyspark.sql import Window
 
-    from pasta_pipeline_spark.streaming.exactly_once import (
-        MicroBatchPin,
-        overwrite_by_batch,
-    )
+    from pasta_pipeline_spark.streaming.exactly_once import overwrite_by_batch
 
     deltas_dir = f"{aux_dir}/closed_deltas"
     stats_dir = f"{aux_dir}/batch_stats"
-    pin = MicroBatchPin(f"{aux_dir}/_pair_lifecycle_mb.json")
     det = (
         batch.select(
             F.col(a_col).alias("a"),
@@ -153,12 +160,9 @@ def apply_lifecycle_batch(
         .localCheckpoint(eager=True)
     )
     if not det.take(1):
-        return
-    # pin the pre-batch state version BEFORE any mutation: a retry
-    # recomputes against the same snapshot (exactly_once.py notes)
-    pre = pin.pre_versions(_mb_id, {"state": state_store})["state"]
-    if pre is not None:
-        state = state_store.read(version=pre).drop("__bkt")
+        return {}
+    if pinned is not None:
+        state = pinned.drop("__bkt")
     else:
         # typed empty frame — id columns inherit the stream's types
         state = (
@@ -250,16 +254,14 @@ def apply_lifecycle_batch(
     )
     overwrite_by_batch(stats, _mb_id, stats_dir)
 
-    updates = folded.select(
+    return {"state": folded.select(
         "a",
         "b",
         "first_b",
         F.col("acc.open.s").alias("s"),
         F.col("acc.open.e").alias("e"),
-    ).withColumn(
-        "__bkt", F.pmod(F.xxhash64(F.col("a"), F.col("b")), F.lit(n_buckets)).cast("int")
-    )
-    state_store.merge_partitioned(updates, key=["a", "b"], partition_col="__bkt")
+    )}
+
 
 def lifecycle_report(
     spark: SparkSession, state_store, aux_dir: str

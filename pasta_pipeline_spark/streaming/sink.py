@@ -1,4 +1,5 @@
-"""Idempotent streaming sink — foreachBatch + merge (SURVEY.md §2.9).
+"""Idempotent and stateful streaming sinks — foreachBatch + merge
+(SURVEY.md §2.9).
 
 The reference absorbs at-least-once scrape overlap with a primary-key
 upsert (db_loader.py:166-181). The Spark-native restatement: every
@@ -6,17 +7,34 @@ micro-batch merges into the target table through the same
 ``merge_upsert`` operator the batch pipeline uses, so replayed batches
 are no-ops (last-writer-wins on the key) — exactly-once *effect* on
 top of at-least-once delivery.
+
+Every query here starts through one helper
+(``exactly_once.start_foreach_batch``: the checkpoint check, the output
+mode, the trigger). The keyed upsert sinks (``foreach_batch_merge*``)
+merge each batch as is. Every stateful sink — sketches, counters,
+sufficient statistics, the gated merge — runs its batch through one
+step, :func:`apply_state_batch`: pin the versions of all of the sink's
+stores, read each at its pinned version, and fold the batch's delta in
+through a keyed merge law (:func:`merge_keyed_state`) or a sketch's own
+merge function, differentially per ``__bkt`` partition where the store
+is bucketed. A rerun of a batch therefore recomputes the same state.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pasta_pipeline_spark.operators.merge import merge_upsert
 from pasta_pipeline_spark.sources.tables import TableStore
+from pasta_pipeline_spark.streaming.exactly_once import (
+    MicroBatchPin,
+    overwrite_by_batch,
+    start_foreach_batch,
+)
 
 
 def foreach_batch_merge(
@@ -34,14 +52,7 @@ def foreach_batch_merge(
         merged = merge_upsert(store.read(), batch, key=key, order_col=order_col)
         store.overwrite(merged)
 
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_batch)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, merge_batch, checkpoint_dir, trigger_once, upsert=True)
 
 
 def foreach_batch_merge_partitioned(
@@ -61,55 +72,112 @@ def foreach_batch_merge_partitioned(
     no-ops: merge semantics are unchanged, only the write scope
     shrinks.
 
-    ``checkpoint_dir`` is required (matching ``foreach_batch_merge``):
-    without a checkpoint the stream has no offset tracking, so a
-    restart replays from scratch or fails — an omission should be a
-    clear API error here, not a silent ``.option(..., None)``."""
-    if not checkpoint_dir:
-        raise ValueError(
-            "foreach_batch_merge_partitioned requires checkpoint_dir: "
-            "offset tracking is what makes the merge sink exactly-once"
-        )
+    ``checkpoint_dir`` is required (as for every sink here): without a
+    checkpoint the stream has no offset tracking, so a restart replays
+    from scratch or fails — an omission raises ValueError."""
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         store.merge_partitioned(
             batch, key=key, partition_col=partition_col, order_col=order_col
         )
 
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_batch)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, merge_batch, checkpoint_dir, trigger_once, upsert=True)
 
 
-def apply_summary_batch(
+# ---------------------------------------------------------------------------
+# The stateful-sink protocol: pin, read pinned, merge, commit
+# ---------------------------------------------------------------------------
+
+#: per-column merge laws: every law is associative + commutative with
+#: absence as identity, so ANY batch boundaries yield the same state
+_MERGE_LAWS = {"sum": F.sum, "min": F.min, "max": F.max, "bit_or": F.bit_or}
+
+
+def merge_keyed_state(
+    prev: DataFrame,
+    delta: DataFrame,
+    keys: str | list[str],
+    merge_laws: dict[str, str],
+) -> DataFrame:
+    """union + one groupBy — the merge tree's associativity means this
+    equals folding row-level facts directly (maintained == batch)."""
+    ks = [keys] if isinstance(keys, str) else list(keys)
+    aggs = [
+        _MERGE_LAWS[law](F.col(c)).cast("long").alias(c)
+        for c, law in merge_laws.items()
+    ]
+    return prev.unionByName(delta).groupBy(*ks).agg(*aggs)
+
+
+class State(NamedTuple):
+    """One store of a stateful sink and how a batch's delta folds into
+    it: through the keyed ``laws`` (:func:`merge_keyed_state` on
+    ``keys``), through ``merge(prior, delta)``, or — with neither — as
+    is. ``bucket`` is the store's ``__bkt`` formula: the store is then
+    written with ``merge_partitioned`` (a last-writer-wins upsert on
+    ``keys``), and a law or merge sees only the prior rows of the
+    delta's keys. Without ``bucket`` the merged frame overwrites the
+    store."""
+
+    store: TableStore
+    keys: list[str] | None = None
+    laws: dict[str, str] | None = None
+    merge: Callable[[DataFrame, DataFrame], DataFrame] | None = None
+    bucket: Column | None = None
+
+
+def apply_state_batch(
     batch: DataFrame,
     batch_id: int,
-    store: TableStore,
     marker_path: str,
-    keys: str | list[str],
-    value_col: str,
+    states: dict[str, State],
+    deltas: Callable[[DataFrame, dict], dict],
 ) -> None:
-    """One micro-batch of summary-state maintenance — module-level so
-    tests can drive a simulated intra-batch retry (the apply_ks_batch
-    pattern). Ported to the sufficient-stats factory (r8 verdict ask
-    #5): the per-column laws replicate operators/summaries.py
-    merge_summaries exactly (union + one groupBy; counts/sums add,
-    min/max fold, absence is the identity)."""
-    from pasta_pipeline_spark.operators.summaries import partial_summary
+    """One micro-batch of a stateful sink. Pins the versions of all
+    ``states`` stores at the batch's first execution (MicroBatchPin,
+    marker at ``marker_path``) and reads each at its pinned version
+    (None if the store did not exist yet). ``deltas(batch, prior)``
+    maps names to the batch's delta frames (a name left out is not
+    written); each merges into its store as its :class:`State` says,
+    in ``states`` order. A rerun of the same ``batch_id`` — a retry, or
+    a replay after a lost checkpoint commit — reads the same pinned
+    versions and so commits the same state."""
+    pre = MicroBatchPin(marker_path).pre_versions(
+        batch_id, {name: s.store for name, s in states.items()}
+    )
+    prior = {
+        name: None if v is None else states[name].store.read(version=v)
+        for name, v in pre.items()
+    }
+    out = deltas(batch, prior)
+    for name, s in states.items():
+        if name not in out:
+            continue
+        new, old = out[name], prior[name]
+        if old is not None and (s.laws or s.merge):
+            if s.bucket is not None:
+                old = old.drop("__bkt").join(new.select(*s.keys), s.keys, "semi")
+            new = merge_keyed_state(old, new, s.keys, s.laws) if s.laws else s.merge(old, new)
+        if s.bucket is None:
+            s.store.overwrite(new)
+        else:
+            s.store.merge_partitioned(
+                new.withColumn("__bkt", s.bucket.cast("int")),
+                key=s.keys,
+                partition_col="__bkt",
+            )
 
-    apply_sufficient_stats_batch(
-        batch, batch_id, store, marker_path,
-        delta_fn=lambda b: partial_summary(b, keys, value_col),
-        keys=keys,
-        merge_laws={
-            "n": "sum", "sum_x": "sum", "min_x": "min",
-            "max_x": "max", "sumsq_x": "sum",
-        },
+
+def _start_pinned(stream, checkpoint_dir, trigger_once, apply, *args, upsert=False, **params):
+    """Start a stateful sink: each batch runs ``apply(batch, batch_id,
+    *args, marker_path=..., **params)``, the pin marker kept in the
+    checkpoint dir the sink owns."""
+    return start_foreach_batch(
+        stream,
+        lambda b, i: apply(
+            b, i, *args, marker_path=os.path.join(checkpoint_dir, "_state_mb.json"), **params
+        ),
+        checkpoint_dir, trigger_once, upsert,
     )
 
 
@@ -132,59 +200,23 @@ def incremental_summary_sink(
     tiny overwrite; merge associativity/commutativity (proven by the
     mergeable_summary oracle) makes the maintained table EQUAL to a
     from-scratch summary over all data ever ingested, whatever the
-    batch boundaries were. Intra-batch retries are idempotent via
-    pre-version pinning (streaming/exactly_once.py): a re-run merges
-    against the state recorded BEFORE the batch's first mutation, so
-    the recomputed overwrite is byte-identical. Duplicate ROWS from a
-    non-checkpointed source are a different failure — feed from the
-    deduplicated stream (streaming/dedup.py) for those.
+    batch boundaries were. The per-column laws replicate
+    operators/summaries.py merge_summaries exactly (counts/sums add,
+    min/max fold, absence is the identity). Intra-batch retries are
+    idempotent via pre-version pinning (apply_state_batch): a re-run
+    merges against the state recorded BEFORE the batch's first
+    mutation, so the recomputed overwrite is byte-identical. Duplicate
+    ROWS from a non-checkpointed source are a different failure — feed
+    from the deduplicated stream (streaming/dedup.py) for those.
     """
-    if not checkpoint_dir:
-        raise ValueError("incremental_summary_sink requires checkpoint_dir")
+    from pasta_pipeline_spark.operators.summaries import partial_summary
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_summary_batch(
-            batch, batch_id, store,
-            marker_path=os.path.join(checkpoint_dir, "_summary_mb.json"),
-            keys=keys, value_col=value_col,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def apply_histogram_batch(
-    batch: DataFrame,
-    batch_id: int,
-    store: TableStore,
-    marker_path: str,
-    keys: str | list[str],
-    value_col: str,
-    lo: float,
-    hi: float,
-    n_bins: int = 64,
-) -> None:
-    """One micro-batch of histogram-state maintenance; idempotent
-    under re-execution via pre-version pinning. Ported to the
-    sufficient-stats factory (r8 verdict ask #5): keyed on
-    (keys..., bin) with the single additive law, which is exactly
-    operators/summaries.py merge_histograms."""
-    from pasta_pipeline_spark.operators.summaries import partial_histogram
-
-    ks = [keys] if isinstance(keys, str) else list(keys)
-    apply_sufficient_stats_batch(
-        batch, batch_id, store, marker_path,
-        delta_fn=lambda b: partial_histogram(
-            b, ks, value_col, lo=lo, hi=hi, n_bins=n_bins
-        ),
-        keys=ks + ["bin"],
-        merge_laws={"bin_n": "sum"},
+    return sufficient_stats_sink(
+        stream, store, checkpoint_dir,
+        delta_fn=lambda b: partial_summary(b, keys, value_col),
+        keys=keys,
+        merge_laws={"n": "sum", "sum_x": "sum", "min_x": "min", "max_x": "max", "sumsq_x": "sum"},
+        trigger_once=trigger_once,
     )
 
 
@@ -205,28 +237,21 @@ def incremental_histogram_sink(
     percentiles (histogram_quantile_bin) stay current at bin-width
     resolution without ever rescanning the corpus — the streaming
     completion of mergeable_quantiles. Same contracts as
-    incremental_summary_sink: state is |keys|·n_bins int64 rows,
-    merge-of-batches == direct under any batch boundaries, and
-    intra-batch retries recompute against the pinned pre-version
-    (idempotent; retry-pytest-pinned)."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_histogram_sink requires checkpoint_dir")
+    incremental_summary_sink: state is |keys|·n_bins int64 rows keyed on
+    (keys..., bin) under the single additive law (exactly
+    operators/summaries.py merge_histograms), merge-of-batches == direct
+    under any batch boundaries, and intra-batch retries recompute
+    against the pinned pre-version (idempotent; retry-pytest-pinned)."""
+    from pasta_pipeline_spark.operators.summaries import partial_histogram
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_histogram_batch(
-            batch, batch_id, store,
-            marker_path=os.path.join(checkpoint_dir, "_histogram_mb.json"),
-            keys=keys, value_col=value_col, lo=lo, hi=hi, n_bins=n_bins,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    ks = [keys] if isinstance(keys, str) else list(keys)
+    return sufficient_stats_sink(
+        stream, store, checkpoint_dir,
+        delta_fn=lambda b: partial_histogram(b, ks, value_col, lo=lo, hi=hi, n_bins=n_bins),
+        keys=ks + ["bin"],
+        merge_laws={"bin_n": "sum"},
+        trigger_once=trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def apply_heavy_hitter_batch(
@@ -240,23 +265,19 @@ def apply_heavy_hitter_batch(
     partition_cap: int | None | str = "auto",
 ) -> None:
     """One micro-batch of heavy-hitter-state maintenance; idempotent
-    under re-execution via pre-version pinning (apply_ks_batch
-    pattern)."""
+    under re-execution via pre-version pinning (apply_state_batch)."""
     from pasta_pipeline_spark.operators.sketches import (
         merge_heavy_hitters,
         partial_heavy_hitters,
     )
-    from pasta_pipeline_spark.streaming.exactly_once import MicroBatchPin
 
-    pre = MicroBatchPin(marker_path).pre_versions(batch_id, {"hh": store})
-    part = partial_heavy_hitters(
-        batch, keys, item_col, m=m, partition_cap=partition_cap
+    apply_state_batch(
+        batch, batch_id, marker_path,
+        {"hh": State(store, merge=lambda p, d: merge_heavy_hitters(p, d, keys, m=m))},
+        lambda b, _: {
+            "hh": partial_heavy_hitters(b, keys, item_col, m=m, partition_cap=partition_cap)
+        },
     )
-    if pre["hh"] is not None:
-        merged = merge_heavy_hitters(store.read(version=pre["hh"]), part, keys, m=m)
-    else:
-        merged = part
-    store.overwrite(merged)
 
 
 def incremental_heavy_hitter_sink(
@@ -285,24 +306,10 @@ def incremental_heavy_hitter_sink(
     per-partition bounded pre-aggregation for wide batches (default
     ``"auto"`` = ``4 * m``, the bounded-shuffle path; ``None`` =
     exact)."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_heavy_hitter_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_heavy_hitter_batch(
-            batch, batch_id, store,
-            marker_path=os.path.join(checkpoint_dir, "_hh_mb.json"),
-            keys=keys, item_col=item_col, m=m, partition_cap=partition_cap,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_heavy_hitter_batch, store,
+        keys=keys, item_col=item_col, m=m, partition_cap=partition_cap,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def apply_token_distribution_batch(
@@ -314,30 +321,21 @@ def apply_token_distribution_batch(
     n_buckets: int = 32,
 ) -> None:
     """One micro-batch of token-count-state maintenance; idempotent
-    under re-execution via pre-version pinning (apply_ks_batch
-    pattern). The previous counts fold in via a semi-join against the
-    BATCH vocabulary only — linear in batch tokens, not corpus
-    vocabulary — read at the pinned version so a retry recomputes the
-    identical keyed rows and the LWW merge is a no-op."""
+    under re-execution via pre-version pinning (apply_state_batch).
+    The previous counts fold in via a semi-join against the BATCH
+    vocabulary only — linear in batch tokens, not corpus vocabulary —
+    read at the pinned version so a retry recomputes the identical
+    keyed rows and the LWW merge is a no-op."""
     from pasta_pipeline_spark.operators.divergence import token_distribution
-    from pasta_pipeline_spark.streaming.exactly_once import MicroBatchPin
 
-    pre = MicroBatchPin(marker_path).pre_versions(batch_id, {"td": store})
-    counts = token_distribution(batch, text_col=text_col)
-    if pre["td"] is not None:
-        prev_touched = (
-            store.read(version=pre["td"]).drop("__bkt")
-            .join(counts.select("tok"), "tok", "semi")
-        )
-        counts = (
-            prev_touched.unionByName(counts)
-            .groupBy("tok")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
-    with_bkt = counts.withColumn(
-        "__bkt", F.pmod(F.xxhash64(F.col("tok")), F.lit(n_buckets)).cast("int")
+    apply_state_batch(
+        batch, batch_id, marker_path,
+        {"td": State(
+            store, keys=["tok"], laws={"c": "sum"},
+            bucket=F.pmod(F.xxhash64(F.col("tok")), F.lit(n_buckets)),
+        )},
+        lambda b, _: {"td": token_distribution(b, text_col=text_col)},
     )
-    store.merge_partitioned(with_bkt, key="tok", partition_col="__bkt")
 
 
 def incremental_token_distribution_sink(
@@ -359,24 +357,10 @@ def incremental_token_distribution_sink(
     corpus) size. Intra-batch retries recompute the batch's token
     rows against the pinned pre-version (idempotent LWW re-upsert;
     retry-pytest-pinned)."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_token_distribution_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_token_distribution_batch(
-            batch, batch_id, store,
-            marker_path=os.path.join(checkpoint_dir, "_tokdist_mb.json"),
-            text_col=text_col, n_buckets=n_buckets,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_token_distribution_batch, store,
+        text_col=text_col, n_buckets=n_buckets,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def apply_cms_batch(
@@ -389,17 +373,14 @@ def apply_cms_batch(
     depth: int = 4,
 ) -> None:
     """One micro-batch of CMS-state maintenance; idempotent under
-    re-execution via pre-version pinning (apply_ks_batch pattern)."""
+    re-execution via pre-version pinning (apply_state_batch)."""
     from pasta_pipeline_spark.operators.sketches import count_min_sketch, merge_cms
-    from pasta_pipeline_spark.streaming.exactly_once import MicroBatchPin
 
-    pre = MicroBatchPin(marker_path).pre_versions(batch_id, {"cms": store})
-    part = count_min_sketch(batch, item_col, width=width, depth=depth)
-    if pre["cms"] is not None:
-        merged = merge_cms(store.read(version=pre["cms"]), part)
-    else:
-        merged = part
-    store.overwrite(merged)
+    apply_state_batch(
+        batch, batch_id, marker_path,
+        {"cms": State(store, merge=merge_cms)},
+        lambda b, _: {"cms": count_min_sketch(b, item_col, width=width, depth=depth)},
+    )
 
 
 def incremental_cms_sink(
@@ -421,24 +402,10 @@ def incremental_cms_sink(
     data ever ingested, under any batch boundaries. Intra-batch
     retries recompute against the pinned pre-version (idempotent;
     retry-pytest-pinned)."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_cms_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_cms_batch(
-            batch, batch_id, store,
-            marker_path=os.path.join(checkpoint_dir, "_cms_mb.json"),
-            item_col=item_col, width=width, depth=depth,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_cms_batch, store,
+        item_col=item_col, width=width, depth=depth,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def incremental_hll_sink(
@@ -461,26 +428,12 @@ def incremental_hll_sink(
     boundaries or replays. Query it with hll_estimate at any moment."""
     from pasta_pipeline_spark.operators.sketches import hll_state, merge_hll
 
-    if not checkpoint_dir:
-        raise ValueError("incremental_hll_sink requires checkpoint_dir")
-    ks = list(keys) if keys else []
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        part = hll_state(batch, item_col, keys=ks or None, m=m)
-        if store.exists():
-            merged = merge_hll(store.read(), part, keys=ks or None)
-        else:
-            merged = part
-        store.overwrite(merged)
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    ks = list(keys) if keys else None
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_state_batch,
+        states={"hll": State(store, merge=lambda p, d: merge_hll(p, d, keys=ks))},
+        deltas=lambda b, _: {"hll": hll_state(b, item_col, keys=ks, m=m)},
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def incremental_reservoir_sink(
@@ -510,35 +463,21 @@ def incremental_reservoir_sink(
     sampling ladder."""
     from pasta_pipeline_spark.operators.sampling import weighted_sample_topk
 
-    if not checkpoint_dir:
-        raise ValueError("incremental_reservoir_sink requires checkpoint_dir")
     if k < 1:
         raise ValueError("k must be >= 1")
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        cols = batch.columns
-        if store.exists():
-            prev = store.read().select(*cols).dropDuplicates([group_col, id_col])
-            pool = batch.select(*cols).unionByName(prev)
-        else:
-            pool = batch
-        survivors = weighted_sample_topk(
-            pool.dropDuplicates([group_col, id_col]),
-            id_col,
-            weight_col,
-            k,
+    def top(df: DataFrame) -> DataFrame:
+        return weighted_sample_topk(
+            df.dropDuplicates([group_col, id_col]), id_col, weight_col, k,
             group_col=group_col,
         )
-        store.overwrite(survivors)
 
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    # a state row is an input row plus its rank ``rk``
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_state_batch,
+        states={"rsv": State(store, merge=lambda p, d: top(d.unionByName(p).drop("rk")))},
+        deltas=lambda b, _: {"rsv": top(b)},
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def incremental_bloom_sink(
@@ -559,27 +498,13 @@ def incremental_bloom_sink(
     all data ever ingested under any batch boundaries. Probe the live
     store with bloom_probe at any moment — e.g. 'has this URL/text
     hash ever been seen' at O(n_words) broadcast cost."""
-    from pasta_pipeline_spark.operators.sketches import bloom_build, merge_bloom
+    from pasta_pipeline_spark.operators.sketches import bloom_build
 
-    if not checkpoint_dir:
-        raise ValueError("incremental_bloom_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        part = bloom_build(batch, item_col, n_words=n_words, k=k)
-        if store.exists():
-            merged = merge_bloom(store.read(), part)
-        else:
-            merged = part
-        store.overwrite(merged)
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_state_batch,
+        states={"bloom": State(store, keys=["word_idx"], laws={"word": "bit_or"})},
+        deltas=lambda b, _: {"bloom": bloom_build(b, item_col, n_words=n_words, k=k)},
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def incremental_pq_codes_sink(
@@ -608,25 +533,14 @@ def incremental_pq_codes_sink(
     streaming operation."""
     from pasta_pipeline_spark.operators.similarity import pq_encode
 
-    if not checkpoint_dir:
-        raise ValueError("incremental_pq_codes_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        codes = pq_encode(
-            batch, codebooks, n_subspaces, dim, id_col, vec_col
-        ).withColumn(
-            "__bkt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
-        )
-        store.merge_partitioned(codes, key=[id_col, "m"], partition_col="__bkt")
-
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_state_batch, upsert=True,
+        states={"pq": State(
+            store, keys=[id_col, "m"],
+            bucket=F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)),
+        )},
+        deltas=lambda b, _: {"pq": pq_encode(b, codebooks, n_subspaces, dim, id_col, vec_col)},
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def incremental_datacard_sink(
@@ -657,29 +571,15 @@ def incremental_datacard_sink(
 
     Retry safety: the additive counters are made idempotent under
     foreachBatch's intra-batch retry by pre-version pinning
-    (streaming/exactly_once.py) — the step reads every store at the
-    version recorded BEFORE the batch's first mutation, so a retry
-    recomputes identical merged rows even when some merges already
-    landed, and re-upserting them is a no-op."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_datacard_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_datacard_batch(
-            batch, batch_id, source_store, text_store, lang_store,
-            marker_path=os.path.join(checkpoint_dir, "_datacard_mb.json"),
-            text_col=text_col, source_col=source_col, lang_col=lang_col,
-            n_buckets=n_buckets,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    (apply_state_batch) — the step reads every store at the version
+    recorded BEFORE the batch's first mutation, so a retry recomputes
+    identical merged rows even when some merges already landed, and
+    re-upserting them is a no-op."""
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_datacard_batch,
+        source_store, text_store, lang_store, text_col=text_col,
+        source_col=source_col, lang_col=lang_col, n_buckets=n_buckets,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def apply_datacard_batch(
@@ -697,65 +597,38 @@ def apply_datacard_batch(
     """One micro-batch of data-card maintenance — the foreachBatch step
     body, module-level so tests can drive a simulated intra-batch retry
     (same ``batch_id`` twice). Idempotent under re-execution via
-    pre-version pinning (streaming/exactly_once.py)."""
-    from pasta_pipeline_spark.streaming.exactly_once import MicroBatchPin
+    pre-version pinning (apply_state_batch)."""
 
-    pin = MicroBatchPin(marker_path)
-    base = batch.where(F.col(text_col).isNotNull())
-    pre = pin.pre_versions(
-        batch_id,
-        {"source": source_store, "text": text_store, "lang": lang_store},
-    )
-    src_part = base.groupBy(F.col(source_col).alias("source")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.length(text_col)).cast("long").alias("total_chars"),
-    )
-    if pre["source"] is not None:
-        prev = source_store.read(version=pre["source"]).drop("__bkt").join(
-            src_part.select("source"), "source", "semi"
-        )
-        src_part = (
-            prev.unionByName(src_part)
-            .groupBy("source")
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("total_chars").cast("long").alias("total_chars"),
-            )
-        )
-    source_store.merge_partitioned(
-        src_part.withColumn("__bkt", F.lit(0).cast("int")),
-        key="source",
-        partition_col="__bkt",
-    )
+    def deltas(b: DataFrame, _prior: dict) -> dict:
+        base = b.where(F.col(text_col).isNotNull())
+        return {
+            "source": base.groupBy(F.col(source_col).alias("source")).agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum(F.length(text_col)).cast("long").alias("total_chars"),
+            ),
+            "text": base.groupBy(F.md5(F.col(text_col)).alias("h")).agg(
+                F.count(F.lit(1)).cast("long").alias("n")
+            ),
+            "lang": base.select(F.col(lang_col).alias("lang"))
+            .where(F.col("lang").isNotNull())
+            .distinct(),
+        }
 
-    txt_part = base.groupBy(F.md5(F.col(text_col)).alias("h")).agg(
-        F.count(F.lit(1)).cast("long").alias("n")
+    apply_state_batch(
+        batch, batch_id, marker_path,
+        {
+            "source": State(
+                source_store, keys=["source"],
+                laws={"n_docs": "sum", "total_chars": "sum"}, bucket=F.lit(0),
+            ),
+            "text": State(
+                text_store, keys=["h"], laws={"n": "sum"},
+                bucket=F.pmod(F.xxhash64("h"), F.lit(n_buckets)),
+            ),
+            "lang": State(lang_store, merge=lambda p, d: p.unionByName(d).distinct()),
+        },
+        deltas,
     )
-    if pre["text"] is not None:
-        prev = text_store.read(version=pre["text"]).drop("__bkt").join(
-            txt_part.select("h"), "h", "semi"
-        )
-        txt_part = (
-            prev.unionByName(txt_part)
-            .groupBy("h")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
-    text_store.merge_partitioned(
-        txt_part.withColumn(
-            "__bkt", F.pmod(F.xxhash64("h"), F.lit(n_buckets)).cast("int")
-        ),
-        key="h",
-        partition_col="__bkt",
-    )
-
-    lang_part = base.select(F.col(lang_col).alias("lang")).where(
-        F.col("lang").isNotNull()
-    ).distinct()
-    if pre["lang"] is not None:
-        lang_part = (
-            lang_store.read(version=pre["lang"]).unionByName(lang_part).distinct()
-        )
-    lang_store.overwrite(lang_part)
 
 
 def datacard_from_state(
@@ -824,7 +697,9 @@ def expectations_gated_merge_sink(
     garbage mid-stream. The audit is one conditional-aggregate scan
     of the batch; the quarantine keeps full rows for replay after the
     upstream fix (re-ingest the quarantine dir through the same
-    gate).
+    gate). It is partitioned by ``__batch_id``, and a rerun of a batch
+    overwrites that batch's partition instead of appending a second
+    copy (exactly_once.overwrite_by_batch).
 
     The batch-granularity trade is deliberate: per-ROW filtering
     would silently drop data and desynchronize at-least-once
@@ -832,31 +707,18 @@ def expectations_gated_merge_sink(
     re-playable."""
     from pasta_pipeline_spark.operators.expectations import check_expectations
 
-    if not checkpoint_dir:
-        raise ValueError("expectations_gated_merge_sink requires checkpoint_dir")
+    live = State(store, merge=lambda p, d: merge_upsert(p, d, key, order_col=order_col))
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        report = check_expectations(batch, rules)
-        failed = report.where(~F.col("passed")).count() > 0
-        if failed:
-            batch.withColumn("__batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-                "append"
-            ).parquet(quarantine_dir)
-            return
-        if store.exists():
-            merged = merge_upsert(store.read(), batch, key, order_col=order_col)
-        else:
-            merged = batch
-        store.overwrite(merged)
+    def apply(batch: DataFrame, batch_id: int, marker_path: str) -> None:
+        def deltas(b: DataFrame, _prior: dict) -> dict:
+            if check_expectations(b, rules).where(~F.col("passed")).count() > 0:
+                overwrite_by_batch(b, batch_id, quarantine_dir, col="__batch_id")
+                return {}
+            return {"live": b}
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        apply_state_batch(batch, batch_id, marker_path, {"live": live}, deltas)
+
+    return _start_pinned(stream, checkpoint_dir, trigger_once, apply, upsert=True)
 
 
 def incremental_compliance_sink(
@@ -880,24 +742,54 @@ def incremental_compliance_sink(
     reality; pytest-pinned). One keyed merge per batch; intra-batch
     retries recompute against the pinned pre-version (idempotent;
     retry-pytest-pinned)."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_compliance_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_compliance_batch(
-            batch, batch_id, store,
-            marker_path=os.path.join(checkpoint_dir, "_compliance_mb.json"),
-            required_delay_s=required_delay_s, host_col=host_col, ts_col=ts_col,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_compliance_batch, store,
+        required_delay_s=required_delay_s, host_col=host_col, ts_col=ts_col,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _merge_compliance(prior: DataFrame, part: DataFrame, req: int) -> DataFrame:
+    """Fold a batch's per-host compliance rows (with its ``first_ts``)
+    into the stored profile: counters add, extrema fold, and the gap
+    between the stored ``last_ts`` and the batch's first fetch counts
+    as one more gap."""
+    prev = prior.select(
+        F.col("host"),
+        F.col("n_fetches").alias("p_n"),
+        F.col("n_gaps").alias("p_g"),
+        F.col("min_gap_s").alias("p_min"),
+        F.col("n_violations").alias("p_v"),
+        F.col("worst_deficit_s").alias("p_w"),
+        F.col("last_ts").alias("p_last"),
+    )
+    j = part.join(prev, "host", "full_outer")
+    bgap = F.col("first_ts") - F.col("p_last")  # boundary gap
+    bviol = bgap.isNotNull() & (bgap < req)
+    return j.select(
+        "host",
+        (F.coalesce(F.col("n_fetches"), F.lit(0))
+         + F.coalesce(F.col("p_n"), F.lit(0))).alias("n_fetches"),
+        (F.coalesce(F.col("n_gaps"), F.lit(0))
+         + F.coalesce(F.col("p_g"), F.lit(0))
+         + F.when(bgap.isNotNull(), F.lit(1)).otherwise(F.lit(0))
+         ).alias("n_gaps"),
+        F.least(
+            F.coalesce(F.col("min_gap_s"), F.lit(None)),
+            F.coalesce(F.col("p_min"), F.lit(None)),
+            bgap,
+        ).alias("min_gap_s"),
+        (F.coalesce(F.col("n_violations"), F.lit(0))
+         + F.coalesce(F.col("p_v"), F.lit(0))
+         + bviol.cast("long")).alias("n_violations"),
+        F.greatest(
+            F.col("worst_deficit_s"), F.col("p_w"),
+            F.when(bviol, req - bgap),
+        ).alias("worst_deficit_s"),
+        F.greatest(
+            F.coalesce(F.col("last_ts"), F.lit(-(1 << 60))),
+            F.coalesce(F.col("p_last"), F.lit(-(1 << 60))),
+        ).alias("last_ts"),
+    )
 
 
 def apply_compliance_batch(
@@ -910,74 +802,36 @@ def apply_compliance_batch(
     ts_col: str = "fetched_at_s",
 ) -> None:
     """One micro-batch of compliance-state maintenance; idempotent
-    under re-execution via pre-version pinning (apply_ks_batch
-    pattern)."""
+    under re-execution via pre-version pinning (apply_state_batch)."""
     from pyspark.sql import Window
 
-    from pasta_pipeline_spark.streaming.exactly_once import MicroBatchPin
-
-    pre = MicroBatchPin(marker_path).pre_versions(batch_id, {"c": store})
     req = int(required_delay_s)
-    ts = F.col(ts_col).cast("long")
-    w = Window.partitionBy(host_col).orderBy(ts)
-    gaps = batch.select(
-        F.col(host_col).alias("host"), ts.alias("t"),
-        (ts - F.lag(ts).over(w)).alias("gap"),
-    )
-    viol = F.col("gap").isNotNull() & (F.col("gap") < req)
-    part = gaps.groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("n_fetches"),
-        F.count("gap").cast("long").alias("n_gaps"),
-        F.min("gap").cast("long").alias("min_gap_s"),
-        F.sum(viol.cast("long")).cast("long").alias("n_violations"),
-        F.max(F.when(viol, req - F.col("gap"))).cast("long").alias("worst_deficit_s"),
-        F.min("t").cast("long").alias("first_ts"),
-        F.max("t").cast("long").alias("last_ts"),
-    )
-    if pre["c"] is not None:
-        prev = store.read(version=pre["c"]).select(
-            F.col("host"),
-            F.col("n_fetches").alias("p_n"),
-            F.col("n_gaps").alias("p_g"),
-            F.col("min_gap_s").alias("p_min"),
-            F.col("n_violations").alias("p_v"),
-            F.col("worst_deficit_s").alias("p_w"),
-            F.col("last_ts").alias("p_last"),
+
+    def deltas(b: DataFrame, prior: dict) -> dict:
+        ts = F.col(ts_col).cast("long")
+        w = Window.partitionBy(host_col).orderBy(ts)
+        gaps = b.select(
+            F.col(host_col).alias("host"), ts.alias("t"),
+            (ts - F.lag(ts).over(w)).alias("gap"),
         )
-        j = part.join(prev, "host", "full_outer")
-        bgap = F.col("first_ts") - F.col("p_last")  # boundary gap
-        bviol = bgap.isNotNull() & (bgap < req)
-        merged = j.select(
-            "host",
-            (F.coalesce(F.col("n_fetches"), F.lit(0))
-             + F.coalesce(F.col("p_n"), F.lit(0))).alias("n_fetches"),
-            (F.coalesce(F.col("n_gaps"), F.lit(0))
-             + F.coalesce(F.col("p_g"), F.lit(0))
-             + F.when(bgap.isNotNull(), F.lit(1)).otherwise(F.lit(0))
-             ).alias("n_gaps"),
-            F.least(
-                F.coalesce(F.col("min_gap_s"), F.lit(None)),
-                F.coalesce(F.col("p_min"), F.lit(None)),
-                bgap,
-            ).alias("min_gap_s"),
-            (F.coalesce(F.col("n_violations"), F.lit(0))
-             + F.coalesce(F.col("p_v"), F.lit(0))
-             + bviol.cast("long")).alias("n_violations"),
-            F.greatest(
-                F.col("worst_deficit_s"), F.col("p_w"),
-                F.when(bviol, req - bgap),
-            ).alias("worst_deficit_s"),
-            F.greatest(
-                F.coalesce(F.col("last_ts"), F.lit(-(1 << 60))),
-                F.coalesce(F.col("p_last"), F.lit(-(1 << 60))),
-            ).alias("last_ts"),
+        viol = F.col("gap").isNotNull() & (F.col("gap") < req)
+        part = gaps.groupBy("host").agg(
+            F.count(F.lit(1)).cast("long").alias("n_fetches"),
+            F.count("gap").cast("long").alias("n_gaps"),
+            F.min("gap").cast("long").alias("min_gap_s"),
+            F.sum(viol.cast("long")).cast("long").alias("n_violations"),
+            F.max(F.when(viol, req - F.col("gap"))).cast("long").alias("worst_deficit_s"),
+            F.min("t").cast("long").alias("first_ts"),
+            F.max("t").cast("long").alias("last_ts"),
         )
-    else:
-        merged = part.drop("first_ts")
-    store.overwrite(merged.select(
-        "host", "n_fetches", "n_gaps", "min_gap_s",
-        "n_violations", "worst_deficit_s", "last_ts",
-    ))
+        # first_ts only feeds the boundary gap of a merge
+        return {"c": part if prior["c"] is not None else part.drop("first_ts")}
+
+    apply_state_batch(
+        batch, batch_id, marker_path,
+        {"c": State(store, merge=lambda p, d: _merge_compliance(p, d, req))},
+        deltas,
+    )
 
 
 def apply_ks_batch(
@@ -995,44 +849,32 @@ def apply_ks_batch(
     — ADDITIVE, so merging each batch's partial counts keeps the
     exact statistic available at any moment without rescanning.
     Idempotent under re-execution via pre-version pinning
-    (streaming/exactly_once.py): the merge recomputes against the
-    version recorded before the batch's first mutation, and
-    re-upserting identical keyed rows is a no-op."""
-    from pasta_pipeline_spark.streaming.exactly_once import MicroBatchPin
+    (apply_state_batch): the merge recomputes against the version
+    recorded before the batch's first mutation, and re-upserting
+    identical keyed rows is a no-op."""
 
-    pin = MicroBatchPin(marker_path)
-    pre = pin.pre_versions(batch_id, {"ks": store})
-    v = F.col(value_col).cast("long")
-    part = (
-        batch.where(v.isNotNull())
-        .select(
-            v.alias("x"),
-            F.when(group_a_pred, 1).otherwise(0).cast("long").alias("in_a"),
-        )
-        .groupBy("x")
-        .agg(
-            F.sum("in_a").cast("long").alias("a"),
-            F.sum(F.lit(1) - F.col("in_a")).cast("long").alias("b"),
-        )
-    )
-    if pre["ks"] is not None:
-        prev = store.read(version=pre["ks"]).drop("__bkt").join(
-            part.select("x"), "x", "semi"
-        )
-        part = (
-            prev.unionByName(part)
+    def deltas(b: DataFrame, _prior: dict) -> dict:
+        v = F.col(value_col).cast("long")
+        return {"ks": (
+            b.where(v.isNotNull())
+            .select(
+                v.alias("x"),
+                F.when(group_a_pred, 1).otherwise(0).cast("long").alias("in_a"),
+            )
             .groupBy("x")
             .agg(
-                F.sum("a").cast("long").alias("a"),
-                F.sum("b").cast("long").alias("b"),
+                F.sum("in_a").cast("long").alias("a"),
+                F.sum(F.lit(1) - F.col("in_a")).cast("long").alias("b"),
             )
-        )
-    store.merge_partitioned(
-        part.withColumn(
-            "__bkt", F.pmod(F.xxhash64(F.col("x").cast("string")), F.lit(16)).cast("int")
-        ),
-        key="x",
-        partition_col="__bkt",
+        )}
+
+    apply_state_batch(
+        batch, batch_id, marker_path,
+        {"ks": State(
+            store, keys=["x"], laws={"a": "sum", "b": "sum"},
+            bucket=F.pmod(F.xxhash64(F.col("x").cast("string")), F.lit(16)),
+        )},
+        deltas,
     )
 
 
@@ -1051,24 +893,10 @@ def incremental_ks_sink(
     statistic at any time with :func:`ks_report_from_state`;
     equivalence with the batch operator and retry idempotence are
     pytest-pinned."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_ks_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_ks_batch(
-            batch, batch_id, store,
-            marker_path=os.path.join(checkpoint_dir, "_ks_mb.json"),
-            value_col=value_col, group_a_pred=group_a_pred,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_ks_batch, store,
+        value_col=value_col, group_a_pred=group_a_pred,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ks_report_from_state(store: TableStore, ks_scale: int = 10_000) -> DataFrame:
@@ -1106,82 +934,75 @@ def apply_funnel_batch(
     order this equals the batch operator's min-id contract exactly
     (pytest-pinned); out-of-order arrival keeps the earliest-arriving
     copy instead. Retry-idempotent via pre-version pinning."""
-    from pasta_pipeline_spark.operators.quality_filters import gopher_rules
-    from pasta_pipeline_spark.streaming.exactly_once import MicroBatchPin
     from pyspark.sql import Window
 
-    pin = MicroBatchPin(marker_path)
-    pre = pin.pre_versions(batch_id, {"counts": counts_store, "seen": seen_store})
+    from pasta_pipeline_spark.operators.quality_filters import gopher_rules
 
-    g = gopher_rules(batch, id_col=id_col, text_col=text_col)
-    h = F.md5(F.col(text_col).cast("binary"))
-    w = Window.partitionBy("__h").orderBy(F.asc(id_col))
-    hashed = batch.select(
-        F.col(id_col),
-        h.alias("__h"),
-        (F.col(text_col).isNotNull() & (F.length(text_col) > 0)).alias("s1"),
-    ).withColumn("__first_in_batch", F.row_number().over(w) == 1)
-    if pre["seen"] is not None:
-        prior = seen_store.read(version=pre["seen"]).select("h")
-        hashed = hashed.join(
-            prior, hashed["__h"] == prior["h"], "left_anti"
-        ).withColumn("s4", F.col("__first_in_batch"))
-    else:
-        # first batch: survivors are the batch-local firsts
+    def deltas(b: DataFrame, prior: dict) -> dict:
+        g = gopher_rules(b, id_col=id_col, text_col=text_col)
+        h = F.md5(F.col(text_col).cast("binary"))
+        w = Window.partitionBy("__h").orderBy(F.asc(id_col))
+        hashed = b.select(
+            F.col(id_col),
+            h.alias("__h"),
+            (F.col(text_col).isNotNull() & (F.length(text_col) > 0)).alias("s1"),
+        ).withColumn("__first_in_batch", F.row_number().over(w) == 1)
+        if prior["seen"] is not None:
+            seen = prior["seen"].select("h")
+            hashed = hashed.join(seen, hashed["__h"] == seen["h"], "left_anti")
+        # survivors: the batch-local firsts of hashes new to the corpus
         hashed = hashed.withColumn("s4", F.col("__first_in_batch"))
-    # rows removed by the anti-join carry s4=false implicitly: the
-    # rebuild below marks s4 true ONLY for surviving ids and fills the
-    # rest (including anti-joined-away rows) with false.
-    all_rows = batch.select(
-        F.col(id_col),
-        (F.col(text_col).isNotNull() & (F.length(text_col) > 0)).alias("s1"),
-    )
-    flags = (
-        all_rows.join(
-            hashed.where(F.col("s4")).select(F.col(id_col), F.col("s4")),
-            id_col,
-            "left",
+        # rows removed by the anti-join carry s4=false implicitly: the
+        # rebuild below marks s4 true ONLY for surviving ids and fills the
+        # rest (including anti-joined-away rows) with false.
+        all_rows = b.select(
+            F.col(id_col),
+            (F.col(text_col).isNotNull() & (F.length(text_col) > 0)).alias("s1"),
         )
-        .na.fill({"s4": False})
-        .join(
-            g.select(
-                F.col(id_col),
-                F.col("r_word_count").alias("s2"),
-                F.col("pass_all").alias("s3"),
-            ),
-            id_col,
+        flags = (
+            all_rows.join(
+                hashed.where(F.col("s4")).select(F.col(id_col), F.col("s4")),
+                id_col,
+                "left",
+            )
+            .na.fill({"s4": False})
+            .join(
+                g.select(
+                    F.col(id_col),
+                    F.col("r_word_count").alias("s2"),
+                    F.col("pass_all").alias("s3"),
+                ),
+                id_col,
+            )
         )
-    )
-    c = lambda e: F.sum(F.when(e, 1).otherwise(0)).cast("long")  # noqa: E731
-    part = flags.agg(
-        F.count(F.lit(1)).cast("long").alias("n0"),
-        c(F.col("s1")).alias("n1"),
-        c(F.col("s1") & F.col("s2")).alias("n2"),
-        c(F.col("s1") & F.col("s2") & F.col("s3")).alias("n3"),
-        c(F.col("s1") & F.col("s2") & F.col("s3") & F.col("s4")).alias("n4"),
-    ).withColumn("k", F.lit(0).cast("int"))
-    if pre["counts"] is not None:
-        prev = counts_store.read(version=pre["counts"]).drop("__bkt")
-        part = (
-            prev.unionByName(part)
-            .groupBy("k")
-            .agg(*[F.sum(n).cast("long").alias(n) for n in ["n0", "n1", "n2", "n3", "n4"]])
+        c = lambda e: F.sum(F.when(e, 1).otherwise(0)).cast("long")  # noqa: E731
+        counts = flags.agg(
+            F.count(F.lit(1)).cast("long").alias("n0"),
+            c(F.col("s1")).alias("n1"),
+            c(F.col("s1") & F.col("s2")).alias("n2"),
+            c(F.col("s1") & F.col("s2") & F.col("s3")).alias("n3"),
+            c(F.col("s1") & F.col("s2") & F.col("s3") & F.col("s4")).alias("n4"),
+        ).withColumn("k", F.lit(0).cast("int"))
+        new_hashes = (
+            b.where(F.col(text_col).isNotNull())
+            .select(F.md5(F.col(text_col).cast("binary")).alias("h"))
+            .distinct()
         )
-    counts_store.merge_partitioned(
-        part.withColumn("__bkt", F.lit(0).cast("int")), key="k", partition_col="__bkt"
-    )
+        return {"counts": counts, "seen": new_hashes}
 
-    new_hashes = (
-        batch.where(F.col(text_col).isNotNull())
-        .select(F.md5(F.col(text_col).cast("binary")).alias("h"))
-        .distinct()
-    )
-    seen_store.merge_partitioned(
-        new_hashes.withColumn(
-            "__bkt", F.pmod(F.xxhash64("h"), F.lit(n_buckets)).cast("int")
-        ),
-        key="h",
-        partition_col="__bkt",
+    apply_state_batch(
+        batch, batch_id, marker_path,
+        {
+            "counts": State(
+                counts_store, keys=["k"],
+                laws={n: "sum" for n in ("n0", "n1", "n2", "n3", "n4")},
+                bucket=F.lit(0),
+            ),
+            "seen": State(
+                seen_store, keys=["h"], bucket=F.pmod(F.xxhash64("h"), F.lit(n_buckets))
+            ),
+        },
+        deltas,
     )
 
 
@@ -1198,24 +1019,10 @@ def incremental_funnel_sink(
     current as documents arrive, with state = 5 counters + the seen-
     hash set (linear in DISTINCT texts, never rows ingested). Read it
     any time with :func:`funnel_from_state`."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_funnel_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_funnel_batch(
-            batch, batch_id, counts_store, seen_store,
-            marker_path=os.path.join(checkpoint_dir, "_funnel_mb.json"),
-            id_col=id_col, text_col=text_col,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_funnel_batch,
+        counts_store, seen_store, id_col=id_col, text_col=text_col,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def funnel_from_state(counts_store: TableStore) -> DataFrame:
@@ -1277,54 +1084,40 @@ def apply_dsir_batch(
 
     Idempotent under intra-batch retry: the model merge recomputes
     against the pre-version pinned before the first mutation
-    (streaming/exactly_once.py), and the docb rows are a deterministic
+    (apply_state_batch), and the docb rows are a deterministic
     function of the batch, so their LWW re-upsert is a no-op."""
     from pasta_pipeline_spark.functions.text import tokenize_ws
     from pasta_pipeline_spark.operators.dsir import hash_bucket
-    from pasta_pipeline_spark.streaming.exactly_once import MicroBatchPin
 
-    pre = MicroBatchPin(marker_path).pre_versions(batch_id, {"model": model_store})
-    tok = (
-        batch.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col),
-            target_pred.alias("__is_target"),
-            F.explode(tokenize_ws(F.col(text_col))).alias("token"),
-        )
-        .withColumn("b", hash_bucket(F.col("token"), m))
-    )
-    delta = tok.groupBy("b").agg(
-        F.count(F.lit(1)).cast("long").alias("q_cnt"),
-        F.sum(F.col("__is_target").cast("long")).cast("long").alias("t_cnt"),
-    )
-    if pre["model"] is not None:
-        prev = model_store.read(version=pre["model"]).select(
-            "b", F.col("q_cnt").alias("pq"), F.col("t_cnt").alias("pt")
-        )
-        merged = (
-            delta.join(prev, "b", "full_outer")
+    def deltas(b: DataFrame, _prior: dict) -> dict:
+        tok = (
+            b.where(F.col(text_col).isNotNull())
             .select(
-                "b",
-                (F.coalesce(F.col("q_cnt"), F.lit(0))
-                 + F.coalesce(F.col("pq"), F.lit(0))).cast("long").alias("q_cnt"),
-                (F.coalesce(F.col("t_cnt"), F.lit(0))
-                 + F.coalesce(F.col("pt"), F.lit(0))).cast("long").alias("t_cnt"),
+                F.col(id_col),
+                target_pred.alias("__is_target"),
+                F.explode(tokenize_ws(F.col(text_col))).alias("token"),
             )
+            .withColumn("b", hash_bucket(F.col("token"), m))
         )
-    else:
-        merged = delta
-    model_store.overwrite(merged)
+        return {
+            "model": tok.groupBy("b").agg(
+                F.count(F.lit(1)).cast("long").alias("q_cnt"),
+                F.sum(F.col("__is_target").cast("long")).cast("long").alias("t_cnt"),
+            ),
+            "docb": tok.groupBy(id_col, "b").agg(F.count(F.lit(1)).cast("long").alias("k")),
+        }
 
-    doc_b = (
-        tok.groupBy(id_col, "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("k"))
-        .withColumn(
-            "__bkt",
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_buckets))
-            .cast("int"),
-        )
+    apply_state_batch(
+        batch, batch_id, marker_path,
+        {
+            "model": State(model_store, keys=["b"], laws={"q_cnt": "sum", "t_cnt": "sum"}),
+            "docb": State(
+                docb_store, keys=[id_col, "b"],
+                bucket=F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_buckets)),
+            ),
+        },
+        deltas,
     )
-    docb_store.merge_partitioned(doc_b, key=[id_col, "b"], partition_col="__bkt")
 
 
 def incremental_dsir_sink(
@@ -1346,24 +1139,10 @@ def incremental_dsir_sink(
     of the pretraining data path, streamed. State: ≤m model rows +
     per-doc bucket stats; each batch costs its own token explode plus
     two keyed merges."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_dsir_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_dsir_batch(
-            batch, batch_id, model_store, docb_store,
-            marker_path=os.path.join(checkpoint_dir, "_dsir_mb.json"),
-            target_pred=target_pred, id_col=id_col, text_col=text_col, m=m,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_dsir_batch, model_store, docb_store,
+        target_pred=target_pred, id_col=id_col, text_col=text_col, m=m,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dsir_report_from_state(
@@ -1417,45 +1196,6 @@ def dsir_report_from_state(
     return top.withColumn("rk", F.row_number().over(w).cast("long"))
 
 
-def apply_daily_revenue_batch(
-    batch: DataFrame,
-    batch_id: int,
-    day_store: TableStore,
-    marker_path: str,
-    date_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
-    scale: int = 100,
-) -> None:
-    """One micro-batch of daily-revenue sufficient statistics for the
-    streaming Holt forecast: per-day exact-cents sums, merged
-    ADDITIVELY into ``day_store`` (a day's revenue may arrive across
-    many batches). The state is bounded by the calendar span — the
-    same day-domain argument as the batch operator.
-
-    Like the DSIR sink, the MODEL is never materialized per batch: the
-    Holt level/trend recurrence depends on the whole ordered series,
-    so eager state would go stale if an earlier day's mass arrives
-    late. :func:`holt_report_from_state` folds the CURRENT day table
-    on demand — late data is simply absorbed into its day row, which a
-    running-state implementation could never repair.
-
-    Idempotent under intra-batch retry via the factory's pre-version
-    pinning. Ported to the sufficient-stats factory (r8 verdict ask
-    #5): the union+groupBy sum law equals the former full_outer +
-    coalesce-add merge row for row (absence is the identity in
-    both)."""
-
-    def delta(b: DataFrame) -> DataFrame:
-        return b.groupBy(F.col(date_col).cast("date").alias("day")).agg(
-            F.sum(F.floor(F.col(amount_col) * scale).cast("long")).alias("y_fp")
-        )
-
-    apply_sufficient_stats_batch(
-        batch, batch_id, day_store, marker_path,
-        delta_fn=delta, keys="day", merge_laws={"y_fp": "sum"},
-    )
-
-
 def incremental_holt_sink(
     stream: DataFrame,
     day_store: TableStore,
@@ -1468,28 +1208,28 @@ def incremental_holt_sink(
     table over micro-batches so the level/trend forecast is derivable
     at ANY moment (holt_report_from_state) and late-arriving rows are
     absorbed exactly — the forecasting tier of the corpus-stats
-    stack, streamed (the incremental_dsir_sink precedent)."""
-    if not checkpoint_dir:
-        raise ValueError("incremental_holt_sink requires checkpoint_dir")
+    stack, streamed (the incremental_dsir_sink precedent).
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_daily_revenue_batch(
-            batch,
-            batch_id,
-            day_store,
-            marker_path=os.path.join(checkpoint_dir, "_holt_mb.json"),
-            date_col=date_col,
-            amount_col=amount_col,
+    Each batch adds its per-day exact-cents sums into ``day_store`` (a
+    day's revenue may arrive across many batches); the state is bounded
+    by the calendar span. Like the DSIR sink, the MODEL is never
+    materialized per batch: the Holt level/trend recurrence depends on
+    the whole ordered series, so eager state would go stale if an
+    earlier day's mass arrives late — late data is simply absorbed into
+    its day row, which a running-state implementation could never
+    repair. Idempotent under intra-batch retry via pre-version pinning
+    (apply_state_batch)."""
+
+    def delta(b: DataFrame) -> DataFrame:
+        return b.groupBy(F.col(date_col).cast("date").alias("day")).agg(
+            F.sum(F.floor(F.col(amount_col) * 100).cast("long")).alias("y_fp")
         )
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return sufficient_stats_sink(
+        stream, day_store, checkpoint_dir,
+        delta_fn=delta, keys="day", merge_laws={"y_fp": "sum"},
+        trigger_once=trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def holt_report_from_state(day_store: TableStore, **kwargs) -> DataFrame:
@@ -1500,37 +1240,6 @@ def holt_report_from_state(day_store: TableStore, **kwargs) -> DataFrame:
     from pasta_pipeline_spark.operators.timeseries import holt_linear_fold
 
     return holt_linear_fold(day_store.read(), **kwargs)
-
-# ---------------------------------------------------------------------------
-# Generic sufficient-statistics sink factory (r8 verdict ask #5): the
-# additive/bounded-domain sinks above all share one shape — pin the
-# pre-version, reduce the batch to keyed int64 state, merge under a
-# per-column associative law, overwrite, derive the report on demand.
-# The factory extracts that shape; incremental_{summary,histogram,holt}
-# are ports (behavior pinned by their pre-existing suites), and the
-# isotonic / interpolated-quantile twins are built directly on it.
-# ---------------------------------------------------------------------------
-
-#: per-column merge laws: every law is associative + commutative with
-#: absence as identity, so ANY batch boundaries yield the same state
-_MERGE_LAWS = {"sum": F.sum, "min": F.min, "max": F.max}
-
-
-def merge_keyed_state(
-    prev: DataFrame,
-    delta: DataFrame,
-    keys: str | list[str],
-    merge_laws: dict[str, str],
-) -> DataFrame:
-    """union + one groupBy — the merge tree's associativity means this
-    equals folding row-level facts directly (maintained == batch)."""
-    ks = [keys] if isinstance(keys, str) else list(keys)
-    aggs = [
-        _MERGE_LAWS[law](F.col(c)).cast("long").alias(c)
-        for c, law in merge_laws.items()
-    ]
-    return prev.unionByName(delta).groupBy(*ks).agg(*aggs)
-
 
 def apply_sufficient_stats_batch(
     batch: DataFrame,
@@ -1545,19 +1254,13 @@ def apply_sufficient_stats_batch(
     """One micro-batch of keyed-state maintenance: ``delta_fn(batch)``
     reduces the batch to state rows (keys + int64 stat columns), which
     merge into the store under ``merge_laws``. Idempotent under
-    intra-batch retry via pre-version pinning (MicroBatchPin): a rerun
-    of the same batch_id recomputes the identical merged frame."""
-    from pasta_pipeline_spark.streaming.exactly_once import MicroBatchPin
-
-    pre = MicroBatchPin(marker_path).pre_versions(batch_id, {"s": store})
-    delta = delta_fn(batch)
-    if pre["s"] is not None:
-        merged = merge_keyed_state(
-            store.read(version=pre["s"]), delta, keys, merge_laws
-        )
-    else:
-        merged = delta
-    store.overwrite(merged)
+    intra-batch retry via pre-version pinning (apply_state_batch): a
+    rerun of the same batch_id recomputes the identical merged frame."""
+    apply_state_batch(
+        batch, batch_id, marker_path,
+        {"s": State(store, keys=[keys] if isinstance(keys, str) else keys, laws=merge_laws)},
+        lambda b, _: {"s": delta_fn(b)},
+    )
 
 
 def sufficient_stats_sink(
@@ -1568,7 +1271,6 @@ def sufficient_stats_sink(
     delta_fn,
     keys: str | list[str],
     merge_laws: dict[str, str],
-    marker_name: str = "_suffstats_mb.json",
     trigger_once: bool = True,
 ):
     """Start a foreachBatch query maintaining keyed sufficient
@@ -1579,24 +1281,10 @@ def sufficient_stats_sink(
     ever ingested, under any batch boundaries, with intra-batch
     retries idempotent (apply_sufficient_stats_batch). State size is
     |key domain| rows — the caller's bounded-domain obligation."""
-    if not checkpoint_dir:
-        raise ValueError("sufficient_stats_sink requires checkpoint_dir")
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        apply_sufficient_stats_batch(
-            batch, batch_id, store,
-            marker_path=os.path.join(checkpoint_dir, marker_name),
-            delta_fn=delta_fn, keys=keys, merge_laws=merge_laws,
-        )
-
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(step)
+    return _start_pinned(
+        stream, checkpoint_dir, trigger_once, apply_sufficient_stats_batch, store,
+        delta_fn=delta_fn, keys=keys, merge_laws=merge_laws,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def incremental_isotonic_sink(
@@ -1622,8 +1310,7 @@ def incremental_isotonic_sink(
 
     return sufficient_stats_sink(
         stream, store, checkpoint_dir,
-        delta_fn=delta, keys="bin", merge_laws={"n": "sum", "s": "sum"},
-        marker_name="_isotonic_mb.json", trigger_once=trigger_once,
+        delta_fn=delta, keys="bin", merge_laws={"n": "sum", "s": "sum"}, trigger_once=trigger_once,
     )
 
 
@@ -1663,8 +1350,7 @@ def incremental_quantiles_sink(
 
     return sufficient_stats_sink(
         stream, store, checkpoint_dir,
-        delta_fn=delta, keys="v_fp", merge_laws={"cnt": "sum"},
-        marker_name="_quantiles_mb.json", trigger_once=trigger_once,
+        delta_fn=delta, keys="v_fp", merge_laws={"cnt": "sum"}, trigger_once=trigger_once,
     )
 
 
@@ -1787,8 +1473,7 @@ def incremental_cuped_sink(
 
     return sufficient_stats_sink(
         stream, store, checkpoint_dir,
-        delta_fn=delta, keys="__u", merge_laws={"x": "sum", "y": "sum"},
-        marker_name="_cuped_mb.json", trigger_once=trigger_once,
+        delta_fn=delta, keys="__u", merge_laws={"x": "sum", "y": "sum"}, trigger_once=trigger_once,
     )
 
 
@@ -1824,8 +1509,7 @@ def incremental_ratio_delta_sink(
 
     return sufficient_stats_sink(
         stream, store, checkpoint_dir,
-        delta_fn=delta, keys="__u", merge_laws={"x": "sum", "y": "sum"},
-        marker_name="_ratio_delta_mb.json", trigger_once=trigger_once,
+        delta_fn=delta, keys="__u", merge_laws={"x": "sum", "y": "sum"}, trigger_once=trigger_once,
     )
 
 
@@ -1841,8 +1525,8 @@ def ratio_delta_report_from_state(store: TableStore) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# A/B tier II streaming twins (r9 verdict ask #4): SRM, QTE,
-# post-stratification as live readouts on the sufficient_stats factory
+# A/B tier II streaming twins: SRM, QTE, post-stratification as live
+# readouts on sufficient_stats_sink
 # ---------------------------------------------------------------------------
 
 
@@ -1870,8 +1554,7 @@ def incremental_srm_sink(
 
     return sufficient_stats_sink(
         stream, store, checkpoint_dir,
-        delta_fn=delta, keys="__u", merge_laws={"seen": "max"},
-        marker_name="_srm_mb.json", trigger_once=trigger_once,
+        delta_fn=delta, keys="__u", merge_laws={"seen": "max"}, trigger_once=trigger_once,
     )
 
 
@@ -1910,8 +1593,7 @@ def incremental_qte_sink(
 
     return sufficient_stats_sink(
         stream, store, checkpoint_dir,
-        delta_fn=delta, keys="__u", merge_laws={"y": "sum"},
-        marker_name="_qte_mb.json", trigger_once=trigger_once,
+        delta_fn=delta, keys="__u", merge_laws={"y": "sum"}, trigger_once=trigger_once,
     )
 
 
@@ -1953,8 +1635,7 @@ def incremental_post_strat_sink(
 
     return sufficient_stats_sink(
         stream, store, checkpoint_dir,
-        delta_fn=delta, keys=["__u", "s"], merge_laws={"y": "sum"},
-        marker_name="_post_strat_mb.json", trigger_once=trigger_once,
+        delta_fn=delta, keys=["__u", "s"], merge_laws={"y": "sum"}, trigger_once=trigger_once,
     )
 
 
@@ -2018,8 +1699,7 @@ def incremental_srm_by_segment_sink(
 
     return sufficient_stats_sink(
         stream, store, checkpoint_dir,
-        delta_fn=delta, keys=["segment", "__u"], merge_laws={"seen": "max"},
-        marker_name="_srm_seg_mb.json", trigger_once=trigger_once,
+        delta_fn=delta, keys=["segment", "__u"], merge_laws={"seen": "max"}, trigger_once=trigger_once,
     )
 
 
@@ -2058,8 +1738,7 @@ def incremental_group_sequential_sink(
 
     return sufficient_stats_sink(
         stream, store, checkpoint_dir,
-        delta_fn=delta, keys=["__u", "ts_us"], merge_laws={"yv": "sum"},
-        marker_name="_group_seq_mb.json", trigger_once=trigger_once,
+        delta_fn=delta, keys=["__u", "ts_us"], merge_laws={"yv": "sum"}, trigger_once=trigger_once,
     )
 
 

@@ -123,7 +123,7 @@ def test_summary_retry_is_idempotent(spark, tmp_table_dir):
     pinning machinery)."""
     from pasta_pipeline_spark.operators.summaries import partial_summary
     from pasta_pipeline_spark.sources.tables import TableStore
-    from pasta_pipeline_spark.streaming.sink import apply_summary_batch
+    from pasta_pipeline_spark.streaming.sink import State, apply_state_batch
 
     schema = "k string, v double"
     waves = [
@@ -132,10 +132,16 @@ def test_summary_retry_is_idempotent(spark, tmp_table_dir):
     ]
     store = TableStore(spark, f"{tmp_table_dir}/rsum")
     marker = f"{tmp_table_dir}/rsum_mb.json"
+    # incremental_summary_sink's state and laws, through the protocol step
+    laws = {"n": "sum", "sum_x": "sum", "min_x": "min", "max_x": "max", "sumsq_x": "sum"}
+    states = {"s": State(store, keys=["k"], laws=laws)}
     for mb_id, wave in enumerate(waves):
         batch = spark.createDataFrame(wave, schema)
-        apply_summary_batch(batch, mb_id, store, marker, keys="k", value_col="v")
-        apply_summary_batch(batch, mb_id, store, marker, keys="k", value_col="v")
+        for _attempt in range(2):
+            apply_state_batch(
+                batch, mb_id, marker, states,
+                lambda b, _: {"s": partial_summary(b, "k", "v")},
+            )
 
     direct = partial_summary(
         spark.createDataFrame(waves[0] + waves[1], schema), "k", "v"
@@ -146,7 +152,7 @@ def test_summary_retry_is_idempotent(spark, tmp_table_dir):
 def test_histogram_retry_is_idempotent(spark, tmp_table_dir):
     from pasta_pipeline_spark.operators.summaries import partial_histogram
     from pasta_pipeline_spark.sources.tables import TableStore
-    from pasta_pipeline_spark.streaming.sink import apply_histogram_batch
+    from pasta_pipeline_spark.streaming.sink import State, apply_state_batch
 
     schema = "k string, v double"
     waves = [
@@ -155,11 +161,15 @@ def test_histogram_retry_is_idempotent(spark, tmp_table_dir):
     ]
     store = TableStore(spark, f"{tmp_table_dir}/rhist")
     marker = f"{tmp_table_dir}/rhist_mb.json"
-    kw = dict(keys="k", value_col="v", lo=0.0, hi=10.0, n_bins=5)
+    # incremental_histogram_sink's state and law, through the protocol step
+    states = {"s": State(store, keys=["k", "bin"], laws={"bin_n": "sum"})}
     for mb_id, wave in enumerate(waves):
         batch = spark.createDataFrame(wave, schema)
-        apply_histogram_batch(batch, mb_id, store, marker, **kw)
-        apply_histogram_batch(batch, mb_id, store, marker, **kw)
+        for _attempt in range(2):
+            apply_state_batch(
+                batch, mb_id, marker, states,
+                lambda b, _: {"s": partial_histogram(b, ["k"], "v", lo=0.0, hi=10.0, n_bins=5)},
+            )
 
     direct = partial_histogram(
         spark.createDataFrame(waves[0] + waves[1], schema), "k", "v",

@@ -64,19 +64,29 @@ def test_holt_batch_apply_is_retry_idempotent(spark, tmp_table_dir):
     not double-count the additive day sums (MicroBatchPin recomputes
     against the pinned pre-version)."""
     from pasta_pipeline_spark.sources.tables import TableStore
-    from pasta_pipeline_spark.streaming.sink import apply_daily_revenue_batch
+    from pyspark.sql import functions as F
+
+    from pasta_pipeline_spark.streaming.sink import State, apply_state_batch
 
     days = TableStore(spark, f"{tmp_table_dir}/holt_retry_days")
     marker = f"{tmp_table_dir}/holt_retry_ckpt/_holt_mb.json"
+    # incremental_holt_sink's state and law, through the protocol step
+    states = {"s": State(days, keys=["day"], laws={"y_fp": "sum"})}
+
+    def daily(b, _prior):
+        return {"s": b.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
+            F.sum(F.floor(F.col("o_totalprice") * 100).cast("long")).alias("y_fp")
+        )}
+
     b0 = spark.createDataFrame(WAVES[0], SCHEMA)
-    apply_daily_revenue_batch(b0, 0, days, marker_path=marker)
+    apply_state_batch(b0, 0, marker, states, daily)
     once = sorted(tuple(r) for r in days.read().collect())
     # retry of batch 0 (same id): state must be byte-identical
-    apply_daily_revenue_batch(b0, 0, days, marker_path=marker)
+    apply_state_batch(b0, 0, marker, states, daily)
     again = sorted(tuple(r) for r in days.read().collect())
     assert once == again
     # next batch id advances the pin and adds
     b1 = spark.createDataFrame(WAVES[1], SCHEMA)
-    apply_daily_revenue_batch(b1, 1, days, marker_path=marker)
+    apply_state_batch(b1, 1, marker, states, daily)
     total = sum(r["y_fp"] for r in days.read().collect())
     assert total == sum(int(v * 100) for _, _, v in WAVES[0] + WAVES[1])
