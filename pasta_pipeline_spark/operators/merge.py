@@ -235,19 +235,22 @@ def snapshot_diff(
     quantify a backfill's blast radius, or build a CDC log after the
     fact from two versions (TableStore keeps the previous snapshot for
     exactly this). One full-outer join on the key; column comparison
-    is a single null-safe conjunction, no per-column shuffles.
+    is a single null-safe conjunction, no per-column shuffles. Keys
+    match null-safe too, so a NULL key is one key like any other;
+    presence on each side comes from a marker column, not from the key
+    being non-NULL.
     """
     keys = [key] if isinstance(key, str) else list(key)
     shared = [c for c in old.columns if c in set(new.columns) and c not in keys]
-    o = old.alias("o")
-    n = new.alias("n")
+    o = old.withColumn("__present", F.lit(True)).alias("o")
+    n = new.withColumn("__present", F.lit(True)).alias("n")
     cond = None
     for k in keys:
         c = F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}"))
         cond = c if cond is None else (cond & c)
     joined = o.join(n, cond, "full_outer")
-    in_old = F.col(f"o.{keys[0]}").isNotNull()
-    in_new = F.col(f"n.{keys[0]}").isNotNull()
+    in_old = F.col("o.__present").isNotNull()
+    in_new = F.col("n.__present").isNotNull()
     same = F.lit(True)
     for c in shared:
         same = same & F.col(f"o.{c}").eqNullSafe(F.col(f"n.{c}"))

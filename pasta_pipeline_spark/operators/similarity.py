@@ -276,7 +276,8 @@ def auto_lsh_config(
     corpus size; at 10× the vectors, bucket occupancy n/2^planes grows
     10× and in-bucket pair generation ~100× — super-linear BY CONFIG).
 
-    Recipe (measured in SCALELADDER_r8's *_recalibrated rows —
+    Recipe (measured in the r8 scale ladder's *_recalibrated rows, in
+    the tree at commit 0a831ac —
     hard_negatives 37× → 8.2×, semantic_dedup 12.4× → 2.6× on the same
     10× data):
 
@@ -1811,7 +1812,8 @@ def semantic_dedup_clustered(
     arXiv:2303.09540 §3: k-means the embeddings, dedup WITHIN each
     cluster) — the bounded-pair-volume sibling of
     :func:`semantic_dedup`, built for the second decade the LSH-band
-    recipe could not hold at fixed cost (SCALELADDER_r11's one flag).
+    recipe could not hold at fixed cost (the r11 scale ladder's one
+    flag; its output is in the tree at commit 0a831ac).
 
     Same keep contract: a vector is dropped iff some cell-sharing
     neighbor with a SMALLER id has cosine >= threshold; the smallest
@@ -1877,9 +1879,10 @@ def semantic_dedup_auto(
       with :func:`ivf_cell_profile`), and past
       :data:`IVF_TWO_LEVEL_MIN_CELLS` cells the assignment itself
       auto-switches to the two-level n^1.25 shape. Measured sf10:
-      clustered 100.0s ratio 7.7 vs banded 115.3s ratio 14.49
-      (SCALELADDER_r12) — the banded recipe's flag is a price tag this
-      front door simply stops paying at scale.
+      clustered 100.0s ratio 7.7 vs banded 115.3s ratio 14.49 (r12
+      scale ladder, in the tree at commit 0a831ac) — the banded
+      recipe's flag is a price tag this front door simply stops paying
+      at scale.
 
     Keep contract is IDENTICAL either way (smallest id of every gated
     near-dup group survives; returns ``(id_col, kept 0/1)``); what
@@ -1904,7 +1907,7 @@ def semantic_dedup_auto(
     logging.getLogger(__name__).warning(
         "semantic_dedup_auto: n=%d > anchor %d — routing to the "
         "cluster gate (banded band-collision volume is the known "
-        "super-linear term past the anchor; SCALELADDER sf10 banded "
+        "super-linear term past the anchor; r12 scale ladder sf10 banded "
         "ratio 14.49 vs clustered 7.7)",
         n, anchor,
     )
@@ -2045,7 +2048,8 @@ def ivf_threshold_sweep(
     EVERY gated pair (no threshold filter can prune it), which makes
     it the catalog's most pair-volume-sensitive query: at sf10 it
     inherits the recall-first banding recipe's full n·√(n/calibrated)
-    pair volume (measured 226.6 s / ratio 15.75, SCALELADDER_r12's flag).
+    pair volume (measured 226.6 s / ratio 15.75, the r12 scale ladder's
+    flag; its output is in the tree at commit 0a831ac).
     The cluster gate bounds the same readout at Σ|cell|²/2 by
     construction — the sweep's cost is the profile
     :func:`ivf_cell_profile` prints, with cells = √n by default.

@@ -1,10 +1,11 @@
 """Catalog tier: wave 32 (r12) — the cluster-gated SemDedup frontier.
 
-SCALELADDER_r11's one flag (``sf10:semantic_dedup``, second-decade
-ratio 15.4) is inherent to LSH-BAND gating at fixed recall: pair
-volume follows band-collision statistics the corpus controls (NOTES
-#66). The SemDedup paper's own gate is a k-means CLUSTER (Abbas et
-al. 2023, arXiv:2303.09540 §3) — pair volume bounded by Σ|cell|²/2
+The r11 scale ladder's one flag (``sf10:semantic_dedup``,
+second-decade ratio 15.4; its output is in the tree at commit
+0a831ac) is inherent to LSH-BAND gating at fixed recall: pair volume
+follows band-collision statistics the corpus controls (NOTES #66).
+The SemDedup paper's own gate is a k-means CLUSTER (Abbas et al.
+2023, arXiv:2303.09540 §3) — pair volume bounded by Σ|cell|²/2
 with the cell count a direct knob. This wave registers that variant
 with a full oracle (the DuckDB twin replays the deterministic
 Lloyd's training, unrolled iteration by iteration) plus its measured
@@ -147,7 +148,8 @@ def _semantic_dedup_clustered_oracle(
     "deterministic Lloyd's cells (lowest-id seeds, fixed-point means, "
     "total tie order) confine candidate pairs, bounding gate volume at "
     "Sum(|cell|^2)/2 with cells = sqrt(n) by default — the "
-    "bounded-second-decade answer to SCALELADDER_r11's one flag, where "
+    "bounded-second-decade answer to the r11 scale ladder's one flag "
+    "(output in the tree at commit 0a831ac), where "
     "LSH-band gating at fixed recall cost n*sqrt(n/calibrated) "
     "verifies. Same keep contract as semantic_dedup (smallest id of "
     "every near-dup group survives). Oracle replays the ENTIRE "

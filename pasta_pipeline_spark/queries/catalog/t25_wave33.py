@@ -130,8 +130,8 @@ def _ivf_sweep_oracle(
     "(similarity.ivf_threshold_sweep): the banded dedup_threshold_sweep "
     "keeps EVERY gated pair, making it the catalog's most "
     "pair-volume-sensitive query (sf10 fresh 226.6s / ratio 15.75, the "
-    "SCALELADDER_r12 flag); this variant reads the same histogram over "
-    "exactly the pair population semantic_dedup_clustered would see — "
+    "r12 scale ladder's flag, commit 0a831ac); this variant reads the "
+    "same histogram over exactly the pair population semantic_dedup_clustered would see — "
     "bounded at Sum(|cell|^2)/2 by construction. Same (sim_bucket, "
     "n_pairs, cum_pairs_ge) contract; oracle replays training + "
     "assignment + histogram.",

@@ -332,12 +332,12 @@ def _semantic_dedup_auto_oracle() -> str:
     "semantic_dedup (better measured recall at gate scale, NOTES "
     "#70); above it, semantic_dedup_clustered (pair volume capped at "
     "Σ|cell|²/2, two-level n^1.25 assignment past 64 cells — "
-    "SCALELADDER sf10: clustered ratio 7.7 vs banded 14.49). Keep "
-    "contract identical either way; the switch logs the same growth "
+    "r12 scale ladder sf10, commit 0a831ac: clustered ratio 7.7 vs "
+    "banded 14.49). Keep contract identical either way; the switch logs the same growth "
     "breadcrumb as auto_lsh_config. At this gate scale the oracle is "
     "the banded twin, bit for bit; the above-anchor path is pinned by "
-    "the dispatch-equivalence pytest and measured by its own sf10 "
-    "ladder rung.",
+    "the dispatch-equivalence pytest and was measured by that sf10 "
+    "ladder.",
 )
 def q_semantic_dedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pasta_pipeline_spark.operators.similarity import semantic_dedup_auto

@@ -84,7 +84,6 @@ def get_spark(
         # converts them to microsecond timestamps (DuckDB-equivalent
         # truncation).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
     # Scale-dependent knobs stay parameterized (optimization-round

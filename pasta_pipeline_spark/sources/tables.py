@@ -353,42 +353,20 @@ class TableStore:
         to_version: str | None = None,
     ) -> DataFrame:
         """Row-level change audit between two versions (the time-travel
-        machinery's payoff): full outer join on ``key`` between
-        ``from_version`` and ``to_version`` (default: live), each key
-        classified ``added`` / ``removed`` / ``changed`` /
-        ``unchanged`` by null-safe payload-struct comparison. Returns
-        the key columns plus ``change`` — filter it for the delta a
+        machinery's payoff): ``from_version`` against ``to_version``
+        (default: live), each key classified ``added`` / ``removed`` /
+        ``changed`` / ``unchanged`` by operators/merge.py
+        ``snapshot_diff`` (null-safe on keys and payload). Returns the
+        key columns plus ``change`` — filter it for the delta a
         pipeline run produced, or aggregate it for the audit summary.
-        One shuffle on the key; the internal ``__bkt`` partition
-        column (key-derived, hence stable) is excluded from payload
-        comparison so repartitioning alone never reads as a change."""
-        ks = [key] if isinstance(key, str) else list(key)
-        old = self.read(version=from_version)
-        new = self.read(version=to_version)
-        payload = [
-            c for c in new.columns if c not in ks and c != "__bkt"
-        ]
+        One shuffle on the key; the internal ``__bkt`` partition column
+        (key-derived, hence stable) is dropped before the comparison so
+        repartitioning alone never reads as a change."""
+        from pasta_pipeline_spark.operators.merge import snapshot_diff
 
-        def packed(df, alias):
-            body = (
-                F.struct(*[df[c] for c in payload]) if payload else F.lit(True)
-            )
-            return df.select(
-                *[df[c] for c in ks], body.alias(alias)
-            )
-
-        o = packed(old, "__old")
-        n = packed(new, "__new")
-        j = o.join(n, ks, "full_outer")
-        change = (
-            F.when(F.col("__old").isNull(), F.lit("added"))
-            .when(F.col("__new").isNull(), F.lit("removed"))
-            .when(
-                ~F.col("__old").eqNullSafe(F.col("__new")), F.lit("changed")
-            )
-            .otherwise(F.lit("unchanged"))
-        )
-        return j.select(*ks, change.alias("change"))
+        old = self.read(version=from_version).drop("__bkt")
+        new = self.read(version=to_version).drop("__bkt")
+        return snapshot_diff(old, new, key).withColumnRenamed("diff_status", "change")
 
     def compact(self, target_partitions: int, partition_by: str | None = None) -> None:
         """Small-file compaction: rewrite the live version into

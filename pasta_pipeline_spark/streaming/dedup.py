@@ -19,7 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from pasta_pipeline_spark.streaming.exactly_once import start_foreach_batch
+from pasta_pipeline_spark.streaming.exactly_once import (
+    overwrite_by_batch,
+    start_foreach_batch,
+)
 
 
 def dedup_stream(
@@ -84,18 +87,32 @@ def lsh_index_batch(
     bucket join shuffles on (band, bh); within-batch pairs come from
     the same banded frame self-joined. Re-delivered documents are
     no-ops: merge is keyed on doc, and a doc never pairs with itself
-    (replays re-emit the same pairs — at-least-once on the pair sink,
-    keyed dedup downstream).
+    (a replayed batch re-detects the same pairs).
 
     No collect anywhere: the returned frame is always THIS batch's
     pair plan, lazy over the CURRENT index version — TableStore keeps
     one predecessor version, so it stays valid until the NEXT merge
     (materialize before then; documented contract). When
-    ``pairs_dir`` is given the batch's pairs are ALSO appended there
-    as parquet; that directory accumulates the full pair history
-    across batches for separate consumption (read it directly for
-    the cumulative view) — it is not what this function returns.
+    ``pairs_dir`` is given the batch's pairs are ALSO written there as
+    parquet, into the ``batch_id=<batch_id>/`` partition
+    (exactly_once.overwrite_by_batch): a replay of the batch overwrites
+    its own partition, so the directory accumulates the full pair
+    history across batches, each pair once per detecting batch, for
+    separate consumption (read it directly for the cumulative view;
+    ``batch_id`` comes back as a partition column, which
+    operators/pair_ttl.py ``pair_history_report`` keys its TTL windows
+    on) — it is not what this function returns. ``pairs_dir`` requires
+    ``batch_id`` (ValueError otherwise, raised before the index is
+    touched). A batch that finds no pair writes no file, so a
+    directory in which every batch found nothing holds no parquet
+    footer: read it with an explicit schema
+    (``doc_a, doc_b, agree_fp, batch_id``) or check for files first.
     """
+    if pairs_dir is not None and batch_id is None:
+        raise ValueError(
+            "pairs_dir requires batch_id: the pair history is written one "
+            "batch_id partition per micro-batch"
+        )
     from pyspark.sql import functions as F
 
     from pasta_pipeline_spark.operators.text_dedup import (
@@ -160,13 +177,7 @@ def lsh_index_batch(
     # retains the predecessor version it was built on.
     index_store.merge_partitioned(with_bkt, key="doc", partition_col="__bkt")
     if pairs_dir is not None:
-        to_write = pairs
-        if batch_id is not None:
-            # tag the history row with its micro-batch: the lifecycle
-            # analytics (operators/pair_ttl.py pair_history_report)
-            # key their TTL windows on it
-            to_write = pairs.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        to_write.write.mode("append").parquet(pairs_dir)
+        overwrite_by_batch(pairs, batch_id, pairs_dir, col="batch_id")
     sigs_new.unpersist()
     return pairs
 
@@ -197,9 +208,11 @@ def incremental_lsh_dedup(
 ):
     """Streaming near-dup detection: every micro-batch is checked
     against the accumulated signature index and folded in; detected
-    pairs append to ``pairs_dir`` as parquet. The index survives
-    restarts (TableStore versioning) and replayed batches are no-ops
-    (doc-keyed merge; a doc never pairs with itself)."""
+    pairs go to ``pairs_dir`` as parquet, one ``batch_id=<n>/``
+    partition per micro-batch (see :func:`lsh_index_batch`). The index
+    survives restarts (TableStore versioning) and replayed batches are
+    no-ops (doc-keyed merge; a doc never pairs with itself; the pair
+    write overwrites the batch's own partition)."""
     # lsh_index_batch is looked up when each batch runs, not bound here
     return start_foreach_batch(
         stream,

@@ -16,9 +16,7 @@ by one of three mechanisms:
 1. **Keyed last-writer-wins upsert** (``foreach_batch_merge``,
    ``foreach_batch_merge_partitioned``, ``incremental_frontier_sink``,
    ``incremental_lsh_dedup``'s signature index): re-merging the same
-   keyed rows is a no-op, so a rerun needs no guard. (The LSH sink's
-   pair history is a plain append: a rerun appends its pairs again,
-   for a keyed dedup downstream.)
+   keyed rows is a no-op, so a rerun needs no guard.
 
 2. **State merges → pre-version pinning** (:class:`MicroBatchPin`):
    every other stateful sink in ``sink.py``, plus
@@ -37,8 +35,9 @@ by one of three mechanisms:
    partitioned by that id — a retry REPLACES the batch's own
    partition instead of re-appending (the INSERT OVERWRITE idiom a
    lakehouse job uses for reruns). ``pair_lifecycle_sink``'s delta
-   and stats logs and ``expectations_gated_merge_sink``'s quarantine
-   (partitioned by ``__batch_id``) are written this way.
+   and stats logs, ``expectations_gated_merge_sink``'s quarantine
+   (partitioned by ``__batch_id``) and ``incremental_lsh_dedup``'s
+   pair history (partitioned by ``batch_id``) are written this way.
 
 The marker is one tiny JSON per sink, written with the same atomic
 write as the TableStore version pointer. Only the latest batch is
@@ -123,9 +122,23 @@ def overwrite_by_batch(df, batch_id: int, path: str, col: str = "__mb") -> None:
     """Idempotent micro-batch append: stamp ``col`` with the batch id
     and INSERT OVERWRITE only that partition, so a retried batch
     replaces its own rows. Readers select their data columns explicitly
-    and never see ``col`` unless they ask for it."""
+    and never see ``col`` unless they ask for it.
+
+    A read of a dir partitioned by ``col`` silently skips data files at
+    its root, so a dir that already holds one (a flat, unpartitioned
+    append log) raises ValueError before anything is written."""
     from pyspark.sql import functions as F
 
+    try:
+        with os.scandir(path) as entries:
+            flat = [e.name for e in entries if e.is_file() and not e.name.startswith(("_", "."))]
+    except FileNotFoundError:
+        flat = []
+    if flat:
+        raise ValueError(
+            f"{path} holds data files at its root (e.g. {flat[0]}), which a read "
+            f"partitioned by {col} would skip: move them into a {col}=<n>/ dir first"
+        )
     (
         df.withColumn(col, F.lit(int(batch_id)))
         .write.mode("overwrite")

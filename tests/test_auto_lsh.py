@@ -29,8 +29,8 @@ def test_base_config_at_and_below_anchor():
 
 
 def test_growth_recipe_matches_measured_recalibration():
-    # SCALELADDER_r8's *_recalibrated rows measured (7, 4) / (7, 8) at
-    # the 20k-vector sf1 fixture as the configs that restore linear
+    # the r8 scale ladder's *_recalibrated rows (in the tree at commit
+    # 0a831ac) measured (7, 4) / (7, 8) at the 20k-vector sf1 fixture as the configs that restore linear
     # scaling — auto must reproduce them
     assert auto_lsh_config(20_000, 4, 2) == (7, 4)   # semantic_dedup
     assert auto_lsh_config(20_000, 4, 4) == (7, 8)   # default recipe (hard_negatives uses linear_pair_growth since r11)

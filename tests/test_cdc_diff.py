@@ -47,21 +47,25 @@ def test_cdc_delete_of_absent_key_is_noop(spark):
 
 def test_snapshot_diff_statuses(spark):
     old = spark.createDataFrame(
-        [(1, "a", None), (2, "b", "x"), (3, "c", None), (4, "d", "y")],
+        [(1, "a", None), (2, "b", "x"), (3, "c", None), (4, "d", "y"), (None, "n", "z")],
         "id long, v string, extra string",
     )
     new = spark.createDataFrame(
-        [(2, "b", "x"), (3, "C!", None), (4, "d", None), (5, "e", "z")],
+        [(2, "b", "x"), (3, "C!", None), (4, "d", None), (5, "e", "z"), (None, "n", "z")],
         "id long, v string, extra string",
     )
-    got = {r["id"]: r["diff_status"] for r in snapshot_diff(old, new, "id").collect()}
-    assert got == {
-        1: "removed",
-        2: "unchanged",   # null-safe equality on 'extra'
-        3: "changed",
-        4: "changed",     # y -> NULL is a change, not a match
-        5: "added",
-    }
+    got = sorted(
+        ((r["id"], r["diff_status"]) for r in snapshot_diff(old, new, "id").collect()),
+        key=repr,
+    )
+    assert got == sorted([
+        (None, "unchanged"),  # a NULL key is one key, present on both sides
+        (1, "removed"),
+        (2, "unchanged"),   # null-safe equality on 'extra'
+        (3, "changed"),
+        (4, "changed"),     # y -> NULL is a change, not a match
+        (5, "added"),
+    ], key=repr)
 
 
 def test_snapshot_diff_plan_single_join(spark):
@@ -75,3 +79,19 @@ def test_snapshot_diff_plan_single_join(spark):
 
     assert len(re.findall(r"^\(\d+\) \w*Join", plan, flags=re.MULTILINE)) == 1
     assert "CartesianProduct" not in plan
+
+
+
+def test_snapshot_diff_null_keys_on_one_side(spark):
+    """A NULL key on one side only reads once, as added or removed; on
+    both sides with a new payload, as changed; a composite key with a
+    NULL component matches null-safe."""
+    def diff(old, new, key="id", schema="id long, v string"):
+        d = snapshot_diff(spark.createDataFrame(old, schema), spark.createDataFrame(new, schema), key)
+        return sorted((tuple(r) for r in d.collect()), key=repr)
+
+    assert diff([(None, "x"), (1, "a")], [(1, "a"), (None, "y")]) == [(1, "unchanged"), (None, "changed")]
+    assert diff([(None, "x")], [(1, "a")]) == [(1, "added"), (None, "removed")]
+    assert diff([(1, "a")], [(None, "x")]) == [(1, "removed"), (None, "added")]
+    assert diff([(None, 1, "p"), (2, None, "q")], [(None, 1, "p"), (2, None, "Q")],
+                ["a", "b"], "a long, b long, v string") == [(2, None, "changed"), (None, 1, "unchanged")]

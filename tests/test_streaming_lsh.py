@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from pasta_pipeline_spark.sources.tables import TableStore
 from pasta_pipeline_spark.streaming.dedup import incremental_lsh_dedup, lsh_index_batch
 
@@ -256,3 +258,58 @@ def test_pair_lifecycle_sink_equals_batch_report(spark, tmp_table_dir):
     # state is bounded: one open island per distinct pair
     st = state.read().collect()
     assert len(st) == 4 and all(r["e"] >= r["s"] for r in st)
+
+
+def test_pairs_dir_without_batch_id_raises_before_indexing(spark, tmp_table_dir):
+    """The pair history is partitioned by batch_id, so a pairs_dir needs
+    one; the index is not touched."""
+    store = TableStore(spark, f"{tmp_table_dir}/nobid_idx")
+    b = spark.createDataFrame([(1, TEXT_A), (2, TEXT_A)], "doc_id long, text string")
+    with pytest.raises(ValueError, match="batch_id"):
+        lsh_index_batch(b, store, pairs_dir=f"{tmp_table_dir}/nobid_pairs")
+    assert not store.exists()
+    assert not os.path.exists(f"{tmp_table_dir}/nobid_pairs")
+
+
+def test_pairs_dir_replayed_batch_overwrites_its_partition(spark, tmp_table_dir):
+    """Each batch's pairs land in its own ``batch_id=<n>/`` partition; a
+    rerun of batch 0 replaces that partition instead of appending a
+    second copy, and batch 1's partition sits beside it."""
+    pairs_dir = f"{tmp_table_dir}/replay_pairs"
+    store = TableStore(spark, f"{tmp_table_dir}/replay_idx")
+    b0 = spark.createDataFrame([(1, TEXT_A), (2, TEXT_A), (3, TEXT_B)], "doc_id long, text string")
+    lsh_index_batch(b0, store, pairs_dir=pairs_dir, batch_id=0)
+
+    def rows():
+        return sorted(
+            tuple(r) for r in spark.read.parquet(pairs_dir)
+            .select("doc_a", "doc_b", "batch_id").collect()
+        )
+
+    assert rows() == [(1, 2, 0)]
+    lsh_index_batch(b0, store, pairs_dir=pairs_dir, batch_id=0)  # replay
+    assert rows() == [(1, 2, 0)]
+
+    b1 = spark.createDataFrame([(10, TEXT_B)], "doc_id long, text string")
+    lsh_index_batch(b1, store, pairs_dir=pairs_dir, batch_id=1)
+    assert rows() == [(1, 2, 0), (3, 10, 1)]
+    parts = sorted(f for f in os.listdir(pairs_dir) if not f.startswith(("_", ".")))
+    assert parts == ["batch_id=0", "batch_id=1"]
+
+
+def test_pairs_dir_batch_without_pairs_writes_no_data_file(spark, tmp_table_dir):
+    """A batch that finds no pair leaves no parquet file, so the history
+    is only readable once some batch found one."""
+    pairs_dir = f"{tmp_table_dir}/empty_pairs"
+    store = TableStore(spark, f"{tmp_table_dir}/empty_idx")
+    b0 = spark.createDataFrame([(1, TEXT_A), (2, TEXT_B)], "doc_id long, text string")
+    assert lsh_index_batch(b0, store, pairs_dir=pairs_dir, batch_id=0).collect() == []
+    data = [
+        f for _, _, fs in os.walk(pairs_dir) for f in fs if f.endswith(".parquet")
+    ] if os.path.isdir(pairs_dir) else []
+    assert data == []
+
+    b1 = spark.createDataFrame([(5, TEXT_A)], "doc_id long, text string")
+    lsh_index_batch(b1, store, pairs_dir=pairs_dir, batch_id=1)
+    got = [tuple(r) for r in spark.read.parquet(pairs_dir).select("doc_a", "doc_b", "batch_id").collect()]
+    assert got == [(1, 5, 1)]

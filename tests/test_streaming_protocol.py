@@ -1,8 +1,10 @@
 """The streaming-state protocol through the real engine: every stateful
-sink in streaming/sink.py survives a replay of its last micro-batch,
-every foreachBatch entry point rejects a missing checkpoint_dir before
-it starts a query, and the pointer and pin-marker writes are durable
-(fsync before the rename, the directory after it)."""
+sink in streaming/sink.py, the incremental LSH dedup and the pair
+lifecycle survive a replay of their last micro-batch, every
+foreachBatch entry point rejects a missing checkpoint_dir before it
+starts a query, a per-batch partition overwrite refuses a dir whose
+flat root files it would hide, and the pointer and pin-marker writes
+are durable (fsync before the rename, the directory after it)."""
 
 from __future__ import annotations
 
@@ -12,6 +14,7 @@ import inspect
 import json
 import os
 import pkgutil
+import re
 import stat
 
 import pytest
@@ -118,20 +121,41 @@ def _sink_cases():
     }
 
 
+def _replay_cases():
+    """The stateful sinks plus the incremental LSH dedup (its signature
+    index and its pair history under ``<root>/pairs``) and the pair
+    lifecycle (its state and its two logs under ``<root>/aux``; pairs
+    (k, source) detected every 6 ``fetched_at_s`` ticks, so with the
+    default ttl of 3 islands close and both logs get a partition)."""
+    from pasta_pipeline_spark.streaming.dedup import incremental_lsh_dedup
+    from pasta_pipeline_spark.streaming.pair_lifecycle import pair_lifecycle_sink
+
+    return {
+        **_sink_cases(),
+        "incremental_lsh_dedup": (1, lambda st, t, ck, r: incremental_lsh_dedup(
+            st, t[0], f"{r}/pairs", ck, id_col="id")),
+        "pair_lifecycle_sink": (1, lambda st, t, ck, r: pair_lifecycle_sink(
+            st, t[0], f"{r}/aux", ck, a_col="k", b_col="source", batch_col="fetched_at_s")),
+    }
+
+
 def _snapshot(spark, stores, root):
-    """Every state table's rows, and the quarantine's if there is one."""
+    """Every state table's rows, and those of each per-batch log
+    (quarantine, pair history, lifecycle logs) there is."""
     snap = [sorted(repr(tuple(row)) for row in s.read().collect()) for s in stores]
-    if os.path.isdir(f"{root}/quarantine"):
-        snap.append(sorted(repr(tuple(row)) for row in spark.read.parquet(f"{root}/quarantine").collect()))
+    for log in ("quarantine", "pairs", "aux/closed_deltas", "aux/batch_stats"):
+        if os.path.isdir(f"{root}/{log}"):
+            snap.append(sorted(repr(tuple(row)) for row in spark.read.parquet(f"{root}/{log}").collect()))
     return snap
 
 
-@pytest.mark.parametrize("entry", sorted(_sink_cases()))
+@pytest.mark.parametrize("entry", sorted(_replay_cases()))
 def test_replayed_batch_leaves_state_unchanged(spark, tmp_path, entry):
     """Run one wave, delete the newest ``commits/<n>`` of the checkpoint
     (and its .crc), restart: Spark reruns batch n with the same id, and
-    every state table (and the gated sink's quarantine) is unchanged."""
-    n_stores, start = _sink_cases()[entry]
+    every state table (and the gated sink's quarantine, the LSH pair
+    history, the lifecycle logs) is unchanged."""
+    n_stores, start = _replay_cases()[entry]
     root = str(tmp_path)
     src, ckpt = f"{root}/src", f"{root}/ckpt"
     spark.createDataFrame(ROWS, SCHEMA).coalesce(1).write.parquet(src)
@@ -153,6 +177,69 @@ def test_replayed_batch_leaves_state_unchanged(spark, tmp_path, entry):
         os.remove(f"{commits}/.{last}.crc")
     assert run() == [last]  # the engine really reran the batch, same id
     assert _snapshot(spark, stores, root) == once
+
+
+@pytest.mark.parametrize("log", ["quarantine", "pairs", "closed_deltas", "batch_stats"])
+def test_flat_files_at_partitioned_root_raise(spark, tmp_path, log):
+    """A quarantine, pair history or pair-lifecycle log written flat (one
+    unpartitioned append per batch) would vanish from a read once a
+    ``<col>=<n>/`` partition sits beside its root files: the
+    partitioned write refuses it with a ValueError naming the dir and
+    leaves the dir as it was."""
+    from pasta_pipeline_spark.operators.expectations import max_value, not_null
+    from pasta_pipeline_spark.streaming.dedup import lsh_index_batch
+    from pasta_pipeline_spark.streaming.pair_lifecycle import apply_lifecycle_batch
+    from pasta_pipeline_spark.streaming.sink import expectations_gated_merge_sink
+
+    root = str(tmp_path)
+    store = TableStore(spark, f"{root}/state")
+    if log in ("closed_deltas", "batch_stats"):
+        # (1, 2) detected at batches 0 and 5 with ttl=2: the first island
+        # closes, so both lifecycle logs get a partition
+        batch = spark.createDataFrame(
+            [(1, 2, 0), (1, 2, 5), (3, 4, 5)], "doc_a long, doc_b long, batch_id long"
+        )
+        flat = f"{root}/aux/{log}"
+    else:
+        batch = spark.createDataFrame(ROWS, SCHEMA)
+        flat = f"{root}/{log}"
+    batch.limit(3).coalesce(1).write.parquet(flat)
+    before = sorted(os.listdir(flat))
+    if log == "pairs":
+        with pytest.raises(ValueError, match=f"{re.escape(flat)}.*batch_id=<n>/"):
+            lsh_index_batch(batch, store, pairs_dir=flat, batch_id=0, id_col="id")
+    elif log == "quarantine":
+        src = f"{root}/src"
+        batch.coalesce(1).write.parquet(src)
+        q = expectations_gated_merge_sink(
+            spark.readStream.schema(SCHEMA).parquet(src), store,
+            [not_null("id"), max_value("v", 5)], flat, f"{root}/ckpt",
+        )
+        with pytest.raises(Exception, match="move them into a __batch_id=<n>/ dir"):
+            q.awaitTermination(120)
+    else:
+        with pytest.raises(ValueError, match=f"{re.escape(flat)}.*__mb=<n>/"):
+            apply_lifecycle_batch(batch, 0, store, f"{root}/aux", ttl=2)
+    assert sorted(os.listdir(flat)) == before
+    assert spark.read.parquet(flat).count() == 3
+
+
+def test_overwrite_by_batch_writes_beside_hidden_root_files(spark, tmp_path):
+    """The flat-file check passes a new dir and one whose root holds only
+    Spark's ``_SUCCESS`` and hidden ``.crc`` files beside its
+    partitions: batches land in their own partitions and a rerun
+    replaces its own."""
+    from pasta_pipeline_spark.streaming.exactly_once import overwrite_by_batch
+
+    path = f"{tmp_path}/log"
+    df = spark.createDataFrame([(1,), (2,)], "x long")
+    overwrite_by_batch(df, 0, path)
+    with open(f"{path}/.stray.crc", "w") as fh:
+        fh.write("x")
+    overwrite_by_batch(df.limit(1), 1, path)
+    overwrite_by_batch(df.where("x = 2"), 0, path)  # rerun of batch 0
+    got = sorted(tuple(r) for r in spark.read.parquet(path).select("x", "__mb").collect())
+    assert got == [(1, 1), (2, 0)]
 
 
 ENTRY_POINTS = {

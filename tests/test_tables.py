@@ -751,7 +751,7 @@ def test_table_diff_classifies_changes(spark, tmp_table_dir):
 
     store = TableStore(spark, f"{tmp_table_dir}/diff")
     base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "d", 40)],
+        [(1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "d", 40), (None, "n", 0)],
         "id long, name string, v long",
     ).withColumn("__bkt", (F.col("id") % 2).cast("int"))
     store.overwrite(base, partition_by=["__bkt"])
@@ -761,15 +761,32 @@ def test_table_diff_classifies_changes(spark, tmp_table_dir):
         [(1, "a", 10),          # unchanged
          (2, "b", 99),          # changed value
          (3, "cc", 30),         # changed name
-         (5, "e", 50)],         # added (4 removed)
+         (5, "e", 50),          # added (4 removed)
+         (None, "n", 0)],       # NULL key, unchanged: one row, not two
         "id long, name string, v long",
     ).withColumn("__bkt", (F.col("id") % 2).cast("int"))
     store.overwrite(nxt, partition_by=["__bkt"])
 
-    got = {r["id"]: r["change"] for r in store.diff("id", v1).collect()}
-    assert got == {1: "unchanged", 2: "changed", 3: "changed",
-                   4: "removed", 5: "added"}
+    got = sorted(((r["id"], r["change"]) for r in store.diff("id", v1).collect()), key=repr)
+    assert got == sorted([(None, "unchanged"), (1, "unchanged"), (2, "changed"),
+                          (3, "changed"), (4, "removed"), (5, "added")], key=repr)
 
     # diff of a version against itself: everything unchanged
     same = store.diff("id", store.current_version(), store.current_version())
     assert {r["change"] for r in same.collect()} == {"unchanged"}
+
+
+def test_table_diff_across_a_schema_change(spark, tmp_table_dir):
+    """A version that adds a column diffs against its predecessor on the
+    columns both share: rows equal there read as unchanged."""
+    store = TableStore(spark, f"{tmp_table_dir}/diff_schema")
+    store.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string"))
+    v1 = store.current_version()
+    store.overwrite(
+        spark.createDataFrame(
+            [(1, "a", 7), (2, "bb", 8), (3, "c", 9)], "id long, name string, extra long"
+        )
+    )
+    got = sorted((r["id"], r["change"]) for r in store.diff("id", v1).collect())
+    assert got == [(1, "unchanged"), (2, "changed"), (3, "added")]
+    assert store.diff("id", v1).columns == ["id", "change"]

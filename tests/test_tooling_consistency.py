@@ -1,51 +1,18 @@
-"""Tooling-list consistency: every query name the bench and the scale
-ladder reference must exist in the registry — a rename or a split that
-orphans a tooling list should fail HERE, not at measurement time."""
+"""Tooling-list consistency: every query name the plan audit's
+allowlist references must exist in the registry — a rename or a split
+that orphans a tooling list should fail HERE, not at audit time — and
+the oracle gate's corpora stay inside the LSH calibration anchor."""
 
 from __future__ import annotations
 
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def test_bench_queries_registered():
-    from bench import BENCH_QUERIES, BENCH_QUERIES_LLM
-    from pasta_pipeline_spark.queries.catalog import REGISTRY
-
-    missing = [
-        q for q in BENCH_QUERIES + BENCH_QUERIES_LLM if q not in REGISTRY
-    ]
-    assert missing == []
-
-
-def test_scale_ladder_queries_registered():
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-        ),
-    )
-    import scale_ladder
-
-    from pasta_pipeline_spark.queries.catalog import REGISTRY
-
-    missing = [
-        q
-        for q in scale_ladder.QUERIES + scale_ladder.SF1_QUERIES
-        if q not in REGISTRY
-    ]
-    assert missing == []
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 def test_plan_audit_allowlist_registered():
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-        ),
-    )
+    sys.path.insert(0, TOOLS)
     import plan_audit
 
     from pasta_pipeline_spark.queries.catalog import REGISTRY

@@ -1,18 +1,17 @@
 """Interleaved same-session A/B of an ENV toggle read at
 plan-construction time (guide §1).
 
-Same protocol as tools/conf_ab.py (alternating within-pair order per
-round so codegen-cache warmth cancels), with two fixes over it:
+Alternating within-pair order per round, so codegen-cache warmth
+cancels. Two properties matter:
 
 - the toggle is an os.environ key the OPERATORS read while building
   the plan (so code-path changes, not just runtime SQL confs, can be
   A/B'd in one session);
-- the timed region covers query CONSTRUCTION plus the noop write —
-  bench.py's methodology. conf_ab.py timed only the final action,
-  which silently excluded the eager work (calibration counts, GD-step
-  localCheckpoints) that driver-paced queries do inside spark_fn; the
-  r13 floor change looked like a win under that bias and regressed on
-  the driver's bench.
+- the timed region covers query CONSTRUCTION plus the noop write.
+  Timing only the final action silently excludes the eager work
+  (calibration counts, GD-step localCheckpoints) that driver-paced
+  queries do inside spark_fn; the r13 floor change looked like a win
+  under that bias and regressed when measured end to end.
 
 Usage:
   python tools/env_ab.py KEY=valueA KEY=valueB query [query ...]

@@ -34,7 +34,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     tracker = spark.sparkContext.statusTracker()
 
-    # warmup at the smallest sf to absorb JIT/codegen like bench.py does
+    # warmup at the smallest sf to absorb JIT/codegen before timing
     warm = "/root/testdata/sf0.001"
     for name in names:
         df = REGISTRY[name].spark_fn(spark, warm)
