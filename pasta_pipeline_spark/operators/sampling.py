@@ -134,7 +134,9 @@ def temperature_sample(
     thereafter is INTEGER arithmetic (``(target * sqrt_fp) div Σ``),
     never a float sum whose order could differ. Row selection is
     rank-by-md5 within source (row_number ≤ m_s) — exact sample sizes,
-    no RNG, no threshold-float boundary.
+    no RNG, no threshold-float boundary. A NULL id ranks after every
+    real id (NULLS LAST on both rank keys, as in DuckDB's default
+    order).
 
     Scale: one count per source (tiny), broadcast of the per-source
     quota table, one window shuffle on source for the md5 rank. A
@@ -159,7 +161,8 @@ def temperature_sample(
         .select(source_col, "__m")
     )
     w = Window.partitionBy(source_col).orderBy(
-        F.md5(F.col(id_col).cast("string").cast("binary")), F.col(id_col)
+        F.md5(F.col(id_col).cast("string").cast("binary")).asc_nulls_last(),
+        F.col(id_col).asc_nulls_last(),
     )
     ranked = df.withColumn("__rnk", F.row_number().over(w))
     return (

@@ -1891,17 +1891,27 @@ def semantic_dedup_auto(
     (the switch is logged, and fixed-config oracles replay the
     at-anchor path).
 
-    The dispatch count is one aggregate over the id column — metadata
-    scale, same class as the auto-calibration counts both branches
-    already pay.
+    Dispatch and calibration share one driver action: a single
+    aggregate row holds the dispatch count (rows of the right ``dim``)
+    and the LSH calibration count (all rows, as
+    :func:`cosine_dup_pairs` would count them). Below the anchor the
+    resolved ``(num_planes, num_bands)`` is passed down, so the banded
+    gate runs no count of its own.
     """
     if anchor is None:
         anchor = LSH_CALIBRATED_N
-    n = embeddings.where(F.size(F.col(vec_col)) == dim).count()
+    counts = embeddings.agg(
+        F.count(F.when(F.size(F.col(vec_col)) == dim, 1)).alias("n"),
+        F.count(F.lit(1)).alias("n_all"),
+    ).first()
+    n = counts["n"]
     if n <= anchor:
+        num_planes, num_bands = auto_lsh_config(
+            counts["n_all"], base_planes=4, base_bands=num_bands
+        )
         return semantic_dedup(
             embeddings, threshold, dim=dim,
-            num_planes=None, num_bands=num_bands,
+            num_planes=num_planes, num_bands=num_bands,
             id_col=id_col, vec_col=vec_col,
         )
     logging.getLogger(__name__).warning(

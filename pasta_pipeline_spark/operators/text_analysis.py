@@ -211,6 +211,53 @@ def tfidf_top_terms(
     )
 
 
+def _bigram_runs(acc: Column, g: Column) -> Column:
+    """One step of the run-length pass over a sorted bigram array:
+    ``run`` is the length of the current run of equal bigrams, ``top``
+    the longest run so far and ``dist`` the number of runs."""
+    run = F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1).cast("long"))
+    return F.struct(
+        g.alias("prev"),
+        run.alias("run"),
+        F.greatest(acc["top"], run).alias("top"),
+        (acc["dist"] + F.when(g == acc["prev"], 0).otherwise(1)).alias("dist"),
+    )
+
+
+def with_repetition(df, toks: str, scale: int = 10000):
+    """Row-local repetition step: adds ``n_bigrams``, ``top2_frac_fp``
+    and ``dup2_frac_fp`` (see :func:`repetition_metrics`) computed from
+    the token-array column ``toks``. Rows with fewer than two tokens get
+    ``n_bigrams`` 0 and NULL ratios.
+
+    The bigram array is sorted, so equal bigrams sit in runs; one
+    ``aggregate`` pass over it yields the longest run (``top``) and the
+    number of runs (``dist``) — O(n log n) per document, no shuffle."""
+    t = F.col(toks)
+    n = F.size(t)
+    bigrams = F.transform(
+        F.sequence(F.lit(1), n - 1),
+        lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)),
+    )
+    zero = F.struct(
+        F.lit(None).cast("string").alias("prev"),
+        *[F.lit(0).cast("long").alias(c) for c in ("run", "top", "dist")],
+    )
+    runs = F.aggregate(F.array_sort(bigrams), zero, _bigram_runs)
+    total = F.greatest(n - 1, F.lit(0)).cast("long")
+    staged = df.withColumn("n_bigrams", total).withColumn(
+        "__runs", F.when(n >= 2, runs)
+    )
+    return staged.withColumns(
+        {
+            "top2_frac_fp": F.expr(f"({scale} * __runs.top) div n_bigrams"),
+            "dup2_frac_fp": F.expr(
+                f"({scale} * (n_bigrams - __runs.dist)) div n_bigrams"
+            ),
+        }
+    ).drop("__runs")
+
+
 def repetition_metrics(
     docs, id_col: str = "doc_id", text_col: str = "text", scale: int = 10000
 ):
@@ -226,36 +273,51 @@ def repetition_metrics(
     with fewer than two tokens have no bigrams and are excluded
     (documented contract).
 
-    Shuffle profile: explode → groupBy(doc, bigram) → groupBy(doc);
-    both aggregations partial map-side, keys are (doc, gram) — no hot
-    keys beyond a single document's own mass.
+    A row is a document: each output row is computed from its own
+    row's text alone (:func:`with_repetition`), so rows sharing an id
+    — NULL included — are judged separately and never merge. Shape:
+    one row-local projection over the scan; no shuffle.
     """
-    toks = tokenize_ws(F.col(text_col))
-    n = F.size(toks)
-    bigrams = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-        ),
+    toks = docs.select(F.col(id_col), tokenize_ws(F.col(text_col)).alias("__toks"))
+    return (
+        with_repetition(toks, "__toks", scale)
+        .where(F.col("n_bigrams") > 0)
+        .select(id_col, "n_bigrams", "top2_frac_fp", "dup2_frac_fp")
     )
-    b = (
-        docs.withColumn("__n", n)
-        .filter(F.col("__n") >= 2)
-        .select(F.col(id_col), F.explode(bigrams).alias("g"))
+
+
+def with_contamination(
+    df, benchmark, toks: str, text_col: str = "text", n: int = 5, scale: int = 10000
+):
+    """Row-local decontamination step: adds ``n_grams``,
+    ``n_contaminated`` and ``contam_frac_fp`` (see
+    :func:`contamination_check`) computed from the token-array column
+    ``toks``. The benchmark's distinct ``n``-token shingles are one
+    ``collect_set`` row, cross-joined as a broadcast — no driver
+    action — and each row counts ``size(array_intersect(shingles,
+    benchmark set))``. Per-row cost is linear in the benchmark set,
+    which is broadcast-size by definition."""
+    from pasta_pipeline_spark.operators.text_dedup import shingles_from_tokens
+
+    bench = (
+        benchmark.select(tokenize_ws(F.col(text_col)).alias("__bt"))
+        .select(F.explode(shingles_from_tokens(F.col("__bt"), n)).alias("__g"))
+        .agg(F.collect_set("__g").alias("__bench"))
     )
-    counts = b.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("cnt"))
-    m = counts.groupBy(id_col).agg(
-        F.sum("cnt").alias("total"),
-        F.max("cnt").alias("top"),
-        F.count(F.lit(1)).alias("dist"),
-    )
-    return m.select(
-        F.col(id_col),
-        F.col("total").cast("long").alias("n_bigrams"),
-        F.expr(f"({scale} * top) div total").cast("long").alias("top2_frac_fp"),
-        F.expr(f"({scale} * (total - dist)) div total")
-        .cast("long")
-        .alias("dup2_frac_fp"),
+    sh = df.withColumn("__sh", shingles_from_tokens(F.col(toks), n))
+    hits = F.size(F.array_intersect(F.col("__sh"), F.col("__bench")))
+    return (
+        sh.crossJoin(F.broadcast(bench))
+        .withColumns(
+            {
+                "n_grams": F.size(F.col("__sh")).cast("long"),
+                "n_contaminated": hits.cast("long"),
+            }
+        )
+        .withColumn(
+            "contam_frac_fp", F.expr(f"({scale} * n_contaminated) div n_grams")
+        )
+        .drop("__sh", "__bench")
     )
 
 
@@ -274,41 +336,17 @@ def contamination_check(
 
     Returns (id, n_grams, n_contaminated, contam_frac_fp) for every
     corpus doc — zero rows included, so the clean majority is
-    auditable, not silently absent.
+    auditable, not silently absent. A row is a document: each row is
+    judged on its own text (:func:`with_contamination`), so rows
+    sharing an id — NULL included — never merge.
 
-    Scale shape: both sides explode to (doc, shingle) with
-    ``array_distinct`` applied in-array (no per-doc dedup shuffle); the
-    benchmark gram set is typically small → AQE broadcasts it; the
-    corpus side never self-joins. Cost is linear in corpus shingle
-    mass.
+    Scale shape: the corpus side is one row-local projection (no
+    explode, no shuffle); the benchmark side is one global
+    ``collect_set`` of its shingles, broadcast to every task.
     """
-    from pasta_pipeline_spark.operators.text_dedup import shingles
-
-    c_grams = corpus.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("g")
-    )
-    b_grams = (
-        benchmark.select(F.explode(shingles(F.col(text_col), n)).alias("g"))
-        .distinct()
-    )
-    sizes = c_grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
-    hits = (
-        c_grams.join(b_grams, "g")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_contaminated"))
-    )
-    return (
-        sizes.join(hits, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.col("n_grams").cast("long").alias("n_grams"),
-            F.coalesce(F.col("n_contaminated"), F.lit(0))
-            .cast("long")
-            .alias("n_contaminated"),
-            F.expr(f"({scale} * coalesce(n_contaminated, 0)) div n_grams")
-            .cast("long")
-            .alias("contam_frac_fp"),
-        )
+    toks = corpus.select(F.col(id_col), tokenize_ws(F.col(text_col)).alias("__toks"))
+    return with_contamination(toks, benchmark, "__toks", text_col, n, scale).select(
+        id_col, "n_grams", "n_contaminated", "contam_frac_fp"
     )
 
 

@@ -568,8 +568,11 @@ def minhash_lsh_pairs(
     Jaccard (tier 3) so the output contains no false positives:
 
     1. per-doc shingle sets: one groupBy (one shuffle) collects each
-       doc's sorted hashed shingles — the signature kernel
-       (:func:`_minhash_sigs`) and the verifier both read it;
+       doc's sorted hashed shingles, and the signature kernel
+       (:func:`_minhash_sigs`) runs once over them. Both frames are
+       persisted, so the groupBy and the kernel each run once: the
+       two band sides read the cached signatures and the two verify
+       sides the cached sets (released through ``attach_cached_deps``);
     2. banding: hash each band of k/bands signature slots → explode →
        bucket-join on (band, band_hash) → candidate pairs;
     3. verification: exact shingle-Jaccard on candidates only, filter
@@ -587,14 +590,17 @@ def minhash_lsh_pairs(
     """
     from pasta_pipeline_spark.operators.util import attach_cached_deps
 
-    own_cache = shingle_table is None
-    sh = _shingle_table(df, id_col, text_col, n) if own_cache else shingle_table
+    sh = shingle_table if shingle_table is not None else _shingle_table(
+        df, id_col, text_col, n
+    )
     # sh is already the 64-bit shingle hash (hashed shingle table)
     sets = sh.groupBy("doc").agg(F.sort_array(F.collect_list("sh")).alias("shs"))
     sigs = _minhash_sigs(sets.select("doc", F.col("shs").alias("xs")), num_hashes)
     banded = _lsh_bands(sigs, num_hashes, bands)  # raises before anything is cached
-    if own_cache:
-        sh.persist()
+    # the sets feed the kernel and both verify sides, the signatures
+    # both band sides: cached, each is computed once
+    sets.persist()
+    sigs.persist()
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -649,7 +655,7 @@ def minhash_lsh_pairs(
         )
     )
     out = jac.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
-    return attach_cached_deps(out, [sh]) if own_cache else out
+    return attach_cached_deps(out, [sets, sigs])
 
 
 # ---------------------------------------------------------------------------

@@ -43,9 +43,11 @@ def attach_cached_deps(result: DataFrame, deps: list[DataFrame]) -> DataFrame:
     several branches of one plan) cannot unpersist it before the caller
     materializes the result — so they attach it here, and the caller
     releases it with :func:`release_cached_deps` once the result has
-    been collected/written. Runners in this repo (perfbench/,
-    tools/check_oracle.py) do this after every query; long-lived
-    sessions that skip it accumulate executor storage."""
+    been collected/written. ``tools/check_oracle.py``,
+    ``tools/profile_query.py``, ``tools/stage_profile.py`` and
+    ``tools/env_ab.py`` do this after every query; ``perfbench/`` does
+    not, and long-lived sessions that skip it accumulate executor
+    storage."""
     result._pasta_cached_deps = list(deps)  # type: ignore[attr-defined]
     return result
 

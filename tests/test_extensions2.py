@@ -232,6 +232,48 @@ def test_contamination_check_hits_and_zeroes(spark):
     assert got[3]["n_contaminated"] == 0
 
 
+
+def test_repetition_metrics_null_ids_are_separate_documents(spark):
+    """A row is a document: two NULL-id rows are measured on their own
+    texts, not merged into one id group."""
+    from pasta_pipeline_spark.operators.text_analysis import repetition_metrics
+
+    docs = spark.createDataFrame(
+        [(None, "a b a b a b"), (None, "x y z w"), (1, "a b a b a b")],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        (r["doc_id"] is None, r["n_bigrams"], r["top2_frac_fp"], r["dup2_frac_fp"])
+        for r in repetition_metrics(docs).collect()
+    )
+    assert got == [
+        (False, 5, 6000, 6000),
+        (True, 3, 3333, 0),
+        (True, 5, 6000, 6000),
+    ]
+
+
+def test_contamination_check_null_ids_are_separate_documents(spark):
+    """Each NULL-id row keeps its own shingle count and hit count."""
+    from pasta_pipeline_spark.operators.text_analysis import contamination_check
+
+    bench = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    corpus = spark.createDataFrame(
+        [
+            (None, "prefix the quick brown fox jumps over suffix"),  # 4 grams, 2 hits
+            (None, "completely different words here entirely now"),   # 2 grams, 0 hits
+        ],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        (r["n_grams"], r["n_contaminated"])
+        for r in contamination_check(corpus, bench, n=5).collect()
+    )
+    assert got == [(2, 0), (4, 2)]
+
 # ---------------------------------------------------------------------------
 # Approximate sketches: verified by error bound against exact aggregates
 # (hash equality is the wrong contract for engine-specific sketches)
@@ -345,6 +387,20 @@ def test_temperature_sample_quotas(spark):
         for r in temperature_sample(df, "doc_id", "source", target_total=100).collect()
     )
     assert ids1 == ids2
+
+
+def test_temperature_sample_ranks_null_ids_last(spark):
+    """The md5(id), id rank puts a NULL id after every real id (as the
+    DuckDB twin's default NULLS LAST does), so a quota below the source
+    size drops the NULL-id row first."""
+    from pasta_pipeline_spark.operators.sampling import temperature_sample
+
+    df = spark.createDataFrame(
+        [(1, "s"), (2, "s"), (3, "s"), (None, "s")], "doc_id long, source string"
+    )
+    ids = [r["doc_id"] for r in temperature_sample(df, "doc_id", "source", 3).collect()]
+    assert None not in ids
+    assert sorted(ids) == [1, 2, 3]
 
 
 def test_edit_distance_shifted_catches_indels(spark):
@@ -505,6 +561,56 @@ def test_prepare_training_corpus_stages(spark):
     assert survivors == [1, 6]
     assert {r["source"] for r in out} == {"a", "b"}
     assert {r["n_words"] for r in out} == {30, 40}
+
+
+def _training_fixture(spark, rows):
+    long_text = " ".join(f"w{i}" for i in range(30))
+    repeated = ("spam ham " * 15).strip()
+    leaked = "the secret benchmark sentence is hidden here " + " ".join(
+        f"x{i}" for i in range(25)
+    )
+    texts = {"long": long_text, "repeated": repeated, "leaked": leaked, "solo": "solo"}
+    corpus = spark.createDataFrame(
+        [(i, texts[t], src) for i, t, src in rows],
+        "doc_id long, text string, source string",
+    )
+    bench = spark.createDataFrame(
+        [(100, "the secret benchmark sentence is hidden here")],
+        "doc_id long, text string",
+    )
+    return corpus, bench
+
+
+def test_prepare_training_corpus_gates_null_id_rows(spark):
+    """A NULL id does not let a row skip a gate: the repetition and
+    decontamination verdicts are taken from the row's own text."""
+    from pasta_pipeline_spark.plans.training_data import prepare_training_corpus
+
+    corpus, bench = _training_fixture(
+        spark,
+        [
+            (1, "leaked", "a"),
+            (2, "repeated", "a"),
+            (None, "leaked", "b"),
+            (None, "repeated", "b"),
+            (None, "solo", "b"),
+            (3, "long", "b"),
+        ],
+    )
+    out = prepare_training_corpus(corpus, bench, target_total=10).collect()
+    assert [(r["doc_id"], r["source"]) for r in out] == [(3, "b")]
+
+
+def test_prepare_training_corpus_keep_first_ranks_null_id_last(spark):
+    """Keep-first keeps the lowest real id of a content group; a NULL-id
+    copy ranks after it, as in the DuckDB oracle."""
+    from pasta_pipeline_spark.plans.training_data import prepare_training_corpus
+
+    corpus, bench = _training_fixture(
+        spark, [(None, "long", "a"), (5, "long", "a")]
+    )
+    out = prepare_training_corpus(corpus, bench, target_total=10).collect()
+    assert [r["doc_id"] for r in out] == [5]
 
 
 def test_check_constraints_and_quarantine(spark):

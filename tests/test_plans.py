@@ -79,21 +79,67 @@ def test_minhash_verification_no_unconditional_broadcast(spark):
 
 
 def test_minhash_is_one_python_kernel_not_min_aggregates(spark):
-    """Signatures come from ONE Python map kernel (the same UDF on each
-    side of the band self-join), never from the k-``min`` aggregate it
-    replaced — so the 64-column path cannot creep back."""
+    """Signatures come from ONE Python map node — computed once and
+    cached, read by both sides of the band self-join — never from the
+    k-``min`` aggregate it replaced, so neither a second kernel pass
+    nor the 64-column path can creep back."""
     import re
 
     plan = _plan(spark, "minhash_lsh_pairs")
     blocks = plan.split("\n\n")
     maps = [b for b in blocks if re.match(r"\(\d+\) MapInPandas\b", b)]
     udfs = {m for b in maps for m in re.findall(r"Arguments: (\w+\(.*?\)#\d+)", b)}
-    assert maps, "no Python map node in the minhash plan"
-    assert len({re.sub(r"\(.*\)", "", u) for u in udfs}) == 1, udfs
+    assert len(maps) == 1, f"{len(maps)} Python map nodes in the minhash plan"
     assert all(u.startswith("minhash_kernel(") for u in udfs), udfs
     aggs = [b for b in blocks if re.match(r"\(\d+\) (Object)?HashAggregate\b", b)]
     assert aggs
     assert all(b.count("min(") < 64 for b in aggs), "64-min signature aggregate is back"
+
+
+def test_training_corpus_scans_its_corpus_once(spark):
+    """The training-corpus plan evaluates its per-document frame once:
+    the gates are one row-local projection and the two branches of the
+    temperature mix read one cached frame, so ``documents`` is scanned
+    once for the corpus and once for the benchmark (21 scans when each
+    operator and branch re-read the corpus)."""
+    import re
+
+    plan = _plan(spark, "training_corpus")
+    scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
+    assert len(scans) == 2, f"{len(scans)} parquet scans"
+    assert "MapInPandas" not in plan
+
+
+def test_semantic_dedup_auto_dispatch_is_one_action(spark):
+    """Below the anchor the front door takes its dispatch count and its
+    LSH calibration count from one aggregate row and passes the
+    resolved config down: building the frame submits exactly the jobs
+    of one aggregate action (under AQE a map-stage job and a result
+    job), where a dispatch count and a calibration count (which also
+    materialised the gate's cached scan) ran six."""
+    from pyspark.sql import functions as F
+
+    from pasta_pipeline_spark.operators.similarity import semantic_dedup_auto
+    from pasta_pipeline_spark.operators.util import release_cached_deps
+    from pasta_pipeline_spark.queries.catalog._core import _t
+
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    emb = _t(spark, SF_DIR, "embeddings")
+    _, one_action = jobs_of("dispatch-ref", lambda: emb.agg(F.count(F.lit(1))).first())
+    df, jobs = jobs_of(
+        "dispatch-auto", lambda: semantic_dedup_auto(emb, threshold=0.4, dim=64)
+    )
+    release_cached_deps(df)
+    assert len(jobs) == len(one_action), (jobs, one_action)
 
 
 def test_cosine_dup_pairs_is_bucket_gated(spark):

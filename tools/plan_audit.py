@@ -62,7 +62,10 @@ SCALAR_CROSSJOIN_OK = {
     "funnel_steps": "1-row per-level counts",
     "temperature_sample": "1-row sum of per-source sqrt quotas",
     "tfidf_top_terms": "1-row corpus total N",
-    "training_corpus": "1-row totals inside temperature mixing",
+    "training_corpus": "1-row totals inside temperature mixing + the "
+    "1-row benchmark-shingle set of the decontamination gate",
+    "contamination_check": "1-row benchmark-shingle set (collect_set) "
+    "probed per document",
     "constraint_checks": "1-row expected-total scalar for the rule report",
     "dormant_rich_customers": "1-row Q22 balance-threshold scalar subquery",
     "semantic_dedup_clustered": "broadcast k-row centroid matrix (k = "
