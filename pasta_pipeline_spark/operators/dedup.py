@@ -27,27 +27,31 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_RN = "__dedup_rn"
+#: The rank column :func:`rank_latest`, :func:`rank_first` and
+#: :func:`rank_content` add: 1 on the row a key keeps, >1 on the rows
+#: it drops. :func:`kept` is the filter that turns a ranked frame into
+#: the deduplicated one.
+RANK = "__dedup_rn"
 
 
-def _dedup(
+def _rank(
     df: DataFrame,
-    key: str | list[str],
+    keys: list[str],
     order: list[Column],
     exempt: Column | None = None,
 ) -> DataFrame:
-    keys = [key] if isinstance(key, str) else list(key)
     w = Window.partitionBy(*keys).orderBy(*order)
-    if exempt is not None:
-        subject = df.filter(~exempt)
-        exempted = df.filter(exempt)
-        kept = (
-            subject.withColumn(_RN, F.row_number().over(w))
-            .filter(F.col(_RN) == 1)
-            .drop(_RN)
-        )
-        return kept.unionByName(exempted)
-    return df.withColumn(_RN, F.row_number().over(w)).filter(F.col(_RN) == 1).drop(_RN)
+    if exempt is None:
+        return df.withColumn(RANK, F.row_number().over(w))
+    # exempt rows bypass the window and are all kept; a row whose
+    # ``exempt`` is NULL passes neither filter, as in the SQL form
+    ranked = df.filter(~exempt).withColumn(RANK, F.row_number().over(w))
+    return ranked.unionByName(df.filter(exempt).withColumn(RANK, F.lit(1)))
+
+
+def kept(ranked: DataFrame) -> DataFrame:
+    """The rows a ranked frame keeps, without the rank column."""
+    return ranked.filter(F.col(RANK) == 1).drop(RANK)
 
 
 def _tie_order(
@@ -70,6 +74,20 @@ def _tie_order(
     return [direction(struct)] if struct is not None else []
 
 
+def rank_latest(
+    df: DataFrame,
+    key: str | list[str],
+    order_col: str,
+    tiebreak: str | list[str] | None = None,
+) -> DataFrame:
+    """``df`` ranked for :func:`keep_latest` (adds :data:`RANK`)."""
+    keys = [key] if isinstance(key, str) else list(key)
+    order = [F.desc_nulls_last(order_col)] + _tie_order(
+        df, keys, order_col, tiebreak, F.desc
+    )
+    return _rank(df, keys, order)
+
+
 def keep_latest(
     df: DataFrame,
     key: str | list[str],
@@ -83,11 +101,22 @@ def keep_latest(
     same-key same-``order_col`` rows resolve to the column-wise
     greatest row, so the survivor is deterministic (rows that still tie
     are identical in every orderable column)."""
+    return kept(rank_latest(df, key, order_col, tiebreak))
+
+
+def rank_first(
+    df: DataFrame,
+    key: str | list[str],
+    order_col: str,
+    tiebreak: str | list[str] | None = None,
+    exempt: Column | None = None,
+) -> DataFrame:
+    """``df`` ranked for :func:`keep_first` (adds :data:`RANK`)."""
     keys = [key] if isinstance(key, str) else list(key)
-    order = [F.desc_nulls_last(order_col)] + _tie_order(
-        df, keys, order_col, tiebreak, F.desc
+    order = [F.asc_nulls_last(order_col)] + _tie_order(
+        df, keys, order_col, tiebreak, F.asc
     )
-    return _dedup(df, keys, order)
+    return _rank(df, keys, order, exempt=exempt)
 
 
 def keep_first(
@@ -107,19 +136,20 @@ def keep_first(
     Default tiebreak mirrors :func:`keep_latest` (struct of remaining
     orderable columns, ascending).
     """
-    keys = [key] if isinstance(key, str) else list(key)
-    order = [F.asc_nulls_last(order_col)] + _tie_order(
-        df, keys, order_col, tiebreak, F.asc
-    )
-    return _dedup(df, keys, order, exempt=exempt)
+    return kept(rank_first(df, key, order_col, tiebreak, exempt))
+
+
+def rank_content(df: DataFrame) -> DataFrame:
+    """``df`` ranked for :func:`dedup_content` (adds :data:`RANK`)."""
+    exempt = F.col("content_hash").isNull() | (F.col("content_hash") == "")
+    return rank_first(df, "content_hash", "processed_at", tiebreak="url", exempt=exempt)
 
 
 def dedup_content(df: DataFrame) -> DataFrame:
     """The reference's content dedup, exactly: partition by
     ``content_hash``, keep oldest ``processed_at`` (tiebreak ``url``),
     null/empty hashes exempt (duplicate_remover.py:74-95)."""
-    exempt = F.col("content_hash").isNull() | (F.col("content_hash") == "")
-    return keep_first(df, "content_hash", "processed_at", tiebreak="url", exempt=exempt)
+    return kept(rank_content(df))
 
 
 def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:

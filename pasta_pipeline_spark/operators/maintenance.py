@@ -6,8 +6,9 @@ sequences stats → five cleanups → stats → summary. Each Postgres
 DELETE/UPDATE becomes a pure transform here; the caller persists the
 returned DataFrames atomically (plans/pipeline.py owns the table swap).
 
-Deleted-row counts are computed as count_before - count_after, matching
-the reference's ``cur.rowcount`` collection.
+Deleted-row counts come from one tagged aggregate (each row tagged
+with the step that drops it; see :func:`run_full_cleanup`), the analog
+of the reference's ``cur.rowcount`` collection.
 
 Documented deviation (step order): the reference nulls orphan links
 *before* the failed-link and retention deletes (duplicate_remover.py:
@@ -27,55 +28,34 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pasta_pipeline_spark.functions.timestamps import age_predicate
-from pasta_pipeline_spark.operators.antijoin import null_out_orphans
-from pasta_pipeline_spark.operators.dedup import dedup_content, keep_latest
+from pasta_pipeline_spark.operators.antijoin import anti_join, null_out_orphans
+from pasta_pipeline_spark.operators.dedup import RANK, rank_content, rank_latest
 from pasta_pipeline_spark.operators.stats import cleanup_summary
 
 #: Give-up set for failed fetches (duplicate_remover.py:162).
 FAILED_STATUSES = ("error", "timeout", "client_error", "server_error")
 
-
-def remove_duplicate_messages(messages: DataFrame) -> DataFrame:
-    """W1 — keep the latest processed version per message_id
-    (duplicate_remover.py:28-47; see dedup.py for the reference-bug
-    note on its DELETE predicate)."""
-    return keep_latest(messages, "message_id", "processed_at")
-
-
-def remove_duplicate_content(content: DataFrame) -> DataFrame:
-    """W2 — keep the first URL per identical content_hash; null/empty
-    hashes exempt (duplicate_remover.py:74-95)."""
-    return dedup_content(content)
+#: The per-step deleted counts, in the order the stats report them.
+STEPS = (
+    "deleted_messages",
+    "deleted_content",
+    "cleaned_links",
+    "deleted_failed",
+    "deleted_old_messages",
+    "deleted_old_content",
+)
+TAG = "__cleanup_step"
 
 
-def cleanup_failed_links(content: DataFrame, now: Column | None = None) -> DataFrame:
-    """Drop failed fetches that exhausted retries and have not been
-    checked for 7+ days (duplicate_remover.py:158-165)."""
-    doomed = (
-        F.col("status").isin(*FAILED_STATUSES)
-        & (F.col("retry_count") >= 3)
-        & age_predicate("last_checked", 7, now=now)
-    )
-    return content.filter(~F.coalesce(doomed, F.lit(False)))
-
-
-def cleanup_old_messages(
-    messages: DataFrame, retention_days: int = 90, now: Column | None = None
-) -> DataFrame:
-    """Retention delete on message date (duplicate_remover.py:196-202)."""
-    old = age_predicate("date", retention_days, now=now)
-    return messages.filter(~F.coalesce(old, F.lit(False)))
-
-
-def cleanup_old_content(
-    content: DataFrame, retention_days: int = 90, now: Column | None = None
-) -> DataFrame:
-    """Retention delete on processed_at, success rows kept forever
-    (duplicate_remover.py:205-211)."""
-    old = age_predicate("processed_at", retention_days, now=now) & (
-        F.col("status") != "success"
-    )
-    return content.filter(~F.coalesce(old, F.lit(False)))
+def _tag(df: DataFrame, steps: list[tuple[str, Column]]) -> DataFrame:
+    """``df`` plus :data:`TAG`: the name of the first step whose
+    predicate holds, else NULL (the row survives). A NULL predicate
+    drops nothing, as in the reference's WHERE clauses."""
+    tag = None
+    for name, pred in steps:
+        hit = F.coalesce(pred, F.lit(False))
+        tag = F.when(hit, name) if tag is None else tag.when(hit, name)
+    return df.withColumn(TAG, tag)
 
 
 @dataclass
@@ -123,44 +103,43 @@ def run_full_cleanup(
     gains ``index_files_before`` / ``index_files_after`` so the run
     report shows the reclaim, alongside the table-cleanup counts.
 
-    Counting strategy: each step's input/output counts are actions; to
-    avoid recomputing the whole lineage per count we cache the two
-    final frames and derive step deltas from intermediate counts. At
-    production scale the counts come from the table format's commit
-    metrics instead.
+    Counting: each row is tagged with the first step that drops it,
+    in the reference's step order, and a surviving message whose link
+    matches no surviving content url is tagged ``cleaned_links``. All
+    six counts come from one ``groupBy(tag)`` over the union of those
+    tags — one driver action, the analog of the reference's
+    per-statement ``cur.rowcount``. The returned frames are the
+    untagged rows (orphan links nulled); they are not cached, so the
+    caller's table write evaluates their plans once more.
     """
-    m0, c0 = messages.count(), content.count()
-
-    m1 = remove_duplicate_messages(messages)
-    n_m1 = m1.count()
-
-    c1 = remove_duplicate_content(content)
-    n_c1 = c1.count()
-
-    c2 = cleanup_failed_links(c1, now=now)
-    n_c2 = c2.count()
-
-    c3 = cleanup_old_content(c2, retention_days, now=now)
-    n_c3 = c3.count()
-
-    m2 = cleanup_old_messages(m1, retention_days, now=now)
-    n_m2 = m2.count()
-
+    loser = F.col(RANK) != 1
+    # W1 keep-latest per message_id (duplicate_remover.py:28-47; see
+    # dedup.py for the reference-bug note on its DELETE predicate),
+    # then retention on the message date (:196-202)
+    messages = _tag(rank_latest(messages, "message_id", "processed_at"), [
+        ("deleted_messages", loser),
+        ("deleted_old_messages", age_predicate("date", retention_days, now=now)),
+    ])
+    # W2 keep-first per content_hash (:74-95), then failed fetches that
+    # exhausted retries and were not checked for 7+ days (:158-165),
+    # then retention on processed_at, successes kept forever (:205-211)
+    content = _tag(rank_content(content), [
+        ("deleted_content", loser),
+        ("deleted_failed", F.col("status").isin(*FAILED_STATUSES)
+         & (F.col("retry_count") >= 3)
+         & age_predicate("last_checked", 7, now=now)),
+        ("deleted_old_content", age_predicate("processed_at", retention_days, now=now)
+         & (F.col("status") != "success")),
+    ])
+    m2 = messages.filter(F.col(TAG).isNull()).drop(RANK, TAG)
+    c3 = content.filter(F.col(TAG).isNull()).drop(RANK, TAG)
     # orphan rewrite last, against the final content set
-    m3 = null_out_orphans(m2, c3)
-    cleaned_links = (
-        m2.filter(F.col("telegraph_link").isNotNull()).count()
-        - m3.filter(F.col("telegraph_link").isNotNull()).count()
-    )
-
-    counts = {
-        "deleted_messages": m0 - n_m1,
-        "deleted_content": c0 - n_c1,
-        "cleaned_links": cleaned_links,
-        "deleted_failed": n_c1 - n_c2,
-        "deleted_old_messages": n_m1 - n_m2,
-        "deleted_old_content": n_c2 - n_c3,
-    }
+    orphans = anti_join(
+        m2.filter(F.col("telegraph_link").isNotNull()), c3, "telegraph_link", "url"
+    ).select(F.lit("cleaned_links").alias(TAG))
+    tags = messages.select(TAG).unionByName(content.select(TAG)).unionByName(orphans)
+    found = dict(tags.filter(F.col(TAG).isNotNull()).groupBy(TAG).count().collect())
+    counts = {step: found.get(step, 0) for step in STEPS}
     stats = cleanup_summary(counts)
     if lsh_index_store is not None and lsh_index_store.exists():
         from pasta_pipeline_spark.streaming.dedup import compact_lsh_index
@@ -170,4 +149,4 @@ def run_full_cleanup(
         stats["index_files_before"] = _live_data_file_count(lsh_index_store)
         compact_lsh_index(lsh_index_store, index_buckets=lsh_index_buckets)
         stats["index_files_after"] = _live_data_file_count(lsh_index_store)
-    return CleanupResult(messages=m3, content=c3, stats=stats)
+    return CleanupResult(messages=null_out_orphans(m2, c3), content=c3, stats=stats)

@@ -62,13 +62,9 @@ def shingles(text: Column | str, n: int = 3) -> Column:
 
 
 def token_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc, toks) pre-tokenized frame — the ONE corpus scan the whole
-    dedup ladder can share: shingle tiers derive via
-    :func:`shingles_from_tokens` (``_shingle_table(token_frame=...)``)
-    and the SimHash tier explodes the same arrays
-    (``simhash_pairs(token_frame=...)``). Persist it and every tier
-    pays projection cost instead of its own documents scan — at
-    100 TB, the difference between 1x and k-tiers x corpus reads."""
+    """(doc, toks) pre-tokenized frame: the document is tokenized once
+    here, and shingle tiers derive from the token column via
+    :func:`shingles_from_tokens` (as :func:`_shingle_table` does)."""
     from pasta_pipeline_spark.operators.util import ensure_parallelism
 
     src = ensure_parallelism(df.select(F.col(id_col).alias("doc"), F.col(text_col)))
@@ -121,7 +117,6 @@ def _shingle_table(
     text_col: str,
     n: int,
     hashed: bool = True,
-    token_frame: DataFrame | None = None,
 ) -> DataFrame:
     """(doc, sh) exploded shingle table. ``hashed=True`` (default)
     replaces each shingle string with its xxhash64 — every downstream
@@ -129,20 +124,13 @@ def _shingle_table(
     strings (measured ~2x on the pair join). Set-equality results are
     unchanged w.h.p. (collision odds ~n²/2^64 ≈ 1e-10 at 10^5 distinct
     shingles); pass hashed=False where the literal shingle text is
-    needed. ``token_frame``: a (doc, toks) frame from
-    :func:`token_table` to derive from instead of re-tokenizing."""
-    from pasta_pipeline_spark.operators.util import ensure_parallelism
-
-    if token_frame is not None:
-        grams = shingles_from_tokens(F.col("toks"), n)
-        if hashed:
-            grams = F.array_distinct(F.transform(grams, lambda s: F.xxhash64(s)))
-        return token_frame.select("doc", F.explode(grams).alias("sh"))
-    src = ensure_parallelism(df.select(F.col(id_col).alias("doc"), F.col(text_col)))
-    grams = shingles(F.col(text_col), n)
+    needed. Equal to ``shingles(text_col, n)`` value for value, but the
+    document is tokenized once (:func:`token_table`), not once per
+    shingle inside the ``transform`` lambda."""
+    grams = shingles_from_tokens(F.col("toks"), n)
     if hashed:
         grams = F.array_distinct(F.transform(grams, lambda s: F.xxhash64(s)))
-    return src.select("doc", F.explode(grams).alias("sh"))
+    return token_table(df, id_col, text_col).select("doc", F.explode(grams).alias("sh"))
 
 
 def _candidate_pairs(sh: DataFrame, hot_df_cap: int = 1024) -> DataFrame:
@@ -353,25 +341,14 @@ SIMHASH_CHUNKS = 4  # pigeonhole: hamming<=3 ⇒ ≥1 of 4 chunks equal
 _CHUNK_BITS = SIMHASH_BITS // SIMHASH_CHUNKS  # 15
 
 
-def simhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    token_frame: DataFrame | None = None,
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """60-bit SimHash per document: tokens (with multiplicity) hash to
     60-bit values; each bit position accumulates +1/-1; the sign vector
-    is the signature. Returns (doc, simhash). ``token_frame``: shared
-    (doc, toks) scan to explode instead of re-tokenizing."""
+    is the signature. Returns (doc, simhash)."""
     from pasta_pipeline_spark.operators.util import ensure_parallelism
 
-    if token_frame is not None:
-        toks = token_frame.select("doc", F.explode("toks").alias("tok"))
-    else:
-        src = ensure_parallelism(
-            df.select(F.col(id_col).alias("doc"), F.col(text_col))
-        )
-        toks = src.select("doc", F.explode(tokenize_ws(F.col(text_col))).alias("tok"))
+    src = ensure_parallelism(df.select(F.col(id_col).alias("doc"), F.col(text_col)))
+    toks = src.select("doc", F.explode(tokenize_ws(F.col(text_col))).alias("tok"))
     h = toks.select("doc", _hash60(F.col("tok")).alias("h"))
     bit_sums = h.groupBy("doc").agg(
         *[
@@ -395,7 +372,6 @@ def simhash_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    token_frame: DataFrame | None = None,
 ) -> DataFrame:
     """Pairs (doc_a < doc_b) with SimHash Hamming distance <= k.
 
@@ -414,7 +390,7 @@ def simhash_pairs(
     # the leading chunks by one
     widths = [base + (1 if i < SIMHASH_BITS % n_chunks else 0) for i in range(n_chunks)]
     starts = [sum(widths[:i]) for i in range(n_chunks)]
-    sigs = simhash_signatures(df, id_col, text_col, token_frame=token_frame)
+    sigs = simhash_signatures(df, id_col, text_col)
     chunks = sigs.select(
         "doc",
         "simhash",

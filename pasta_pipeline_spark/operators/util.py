@@ -108,20 +108,12 @@ def pair_verify_parallelism(df: DataFrame, *cols: str) -> DataFrame:
     AQE's coalescer leaves alone (REPARTITION_BY_NUM origin), applied
     ONLY at the verify exchanges.
 
-    Width: ``$SPARK_GRAFT_VERIFY_PARTS`` if set (cluster deploys size
-    it like shuffle.partitions), else the session default parallelism.
-    ``off`` disables (returns df unchanged) — the A/B control. At
-    production scale these exchanges carry hundreds of MB and the
-    deploy sets the env alongside shuffle.partitions; the default is
-    never a local[32]-only constant, it is "one task per core", the
-    same rule at every scale.
+    Width: the session default parallelism — "one task per core", the
+    same rule at every scale, never a local[32]-only constant.
     """
     from pyspark.sql import functions as F
 
-    raw = os.environ.get("SPARK_GRAFT_VERIFY_PARTS", "")
-    if raw == "off":
-        return df
-    n = int(raw) if raw else df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *[F.col(c) for c in cols])
 
 

@@ -188,17 +188,29 @@ class PastaPipeline:
         )
         self.content.overwrite(content_final)
 
-        # A2/A3 — run report
-        m_stats = message_stats(self.messages.read()).collect()[0].asDict()
-        c_stats = content_stats(self.content.read()).collect()[0].asDict()
-        fetch_counts = {
-            r["status"]: r["n"]
-            for r in fetched.groupBy("status")
+        # A2/A3 — run report, one action: the two one-row stats
+        # aggregates cross-joined with the fetch statuses as an array
+        # of (status, n) structs (not a map: a NULL status must not
+        # raise). The replicate hint joins the one-row sides in the
+        # result stage; a broadcast would cost a Spark job per side.
+        m_stats = message_stats(self.messages.read())
+        c_stats = content_stats(self.content.read())
+        fetch_counts = (
+            fetched.groupBy("status")
             .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+            .agg(F.collect_list(F.struct("status", "n")).alias("__fetch"))
+        )
+        row = (
+            m_stats.crossJoin(c_stats.hint("shuffle_replicate_nl"))
+            .crossJoin(fetch_counts.hint("shuffle_replicate_nl"))
+            .collect()[0]
+        )
         fetched.unpersist()
-        return {"messages": m_stats, "content": c_stats, "fetch": fetch_counts}
+        return {
+            "messages": {c: row[c] for c in m_stats.columns},
+            "content": {c: row[c] for c in c_stats.columns},
+            "fetch": {r["status"]: r["n"] for r in row["__fetch"]},
+        }
 
     # -- weekly maintenance (lifecycle §3.2) ----------------------------
 

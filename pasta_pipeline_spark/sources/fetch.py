@@ -102,17 +102,19 @@ def fetch_links(
     """Fetch every URL in ``links`` and return
     (url, status, html, attempts) rows — one per input URL.
 
-    Partition-parallel: ``links.repartition(parallelism)`` spreads URLs
-    across workers; within a partition URLs fetch sequentially with the
-    reference's rate limiting.
+    Partition-parallel: ``links.repartition(parallelism)`` (default:
+    the session's default parallelism) spreads URLs across workers;
+    within a partition URLs fetch sequentially with the reference's
+    rate limiting. The repartition is unconditional — the work list
+    (``orderBy().limit()``) is one partition, and asking a plan for its
+    partition count would run its exchanges while the plan is built.
     """
-    from pasta_pipeline_spark.operators.util import ensure_package_on_workers, ensure_parallelism
+    from pasta_pipeline_spark.operators.util import ensure_package_on_workers
 
-    ensure_package_on_workers(links.sparkSession)
+    spark = links.sparkSession
+    ensure_package_on_workers(spark)
     src = links.select(F.col(url_col).alias("url")).where(F.col("url").isNotNull())
-    src = (
-        src.repartition(parallelism) if parallelism else ensure_parallelism(src)
-    )
+    src = src.repartition(parallelism or spark.sparkContext.defaultParallelism)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -75,3 +75,23 @@ def test_oversize_body_capped(spark):
         _links(spark, ["u1"]), transport, rate_limit_delay=0, parallelism=1
     ).collect()
     assert rows[0]["status"] == "content_too_large"
+
+
+def test_building_the_fetch_plan_submits_no_spark_jobs(spark):
+    """fetch_links is a lazy builder: on a work list ending in a
+    groupBy and ``orderBy().limit()`` (the shape of
+    select_unprocessed_links) it submits no job until the caller acts,
+    and the fetch spreads over the session's default parallelism."""
+    raw = spark.createDataFrame([(f"u{i % 5}",) for i in range(20)], "telegraph_link string")
+    todo = raw.groupBy("telegraph_link").count().orderBy("telegraph_link").limit(10)
+    sc = spark.sparkContext
+    group = "fetch-links-build-probe"
+    sc.setJobGroup(group, "fetch_links")
+    try:
+        fetched = fetch_links(todo, make_fixture_transport({}), rate_limit_delay=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert fetched.rdd.getNumPartitions() == sc.defaultParallelism
+    rows = sorted((r["url"], r["status"]) for r in fetched.collect())
+    assert rows == [(f"u{i}", "not_found") for i in range(5)]

@@ -76,6 +76,42 @@ def test_batch_run_end_to_end(spark, tmp_table_dir):
     }
 
 
+def test_batch_report_is_one_action(spark, tmp_table_dir, monkeypatch):
+    """The run report comes from one driver action (the two stats rows
+    cross-joined with the fetch-status array) and is the same dict,
+    key order included, that three separate collects produced."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = []
+    for name in ("collect", "count"):
+        orig = getattr(DataFrame, name)
+        monkeypatch.setattr(
+            DataFrame, name,
+            lambda self, _n=name, _o=orig: (calls.append(_n), _o(self))[1],
+        )
+    pipe = PastaPipeline(spark, tmp_table_dir)
+    report = pipe.run_batch(
+        _raw_messages(spark), make_fixture_transport(RESPONSES), run_ts=F.lit(RUN_TS)
+    )
+    assert calls == ["collect"]
+    assert repr(report) == repr({
+        "messages": {"total_messages": 6, "unique_messages": 6,
+                     "messages_with_links": 5, "duplicate_messages": 0},
+        "content": {"total_content": 5, "successful_content": 2,
+                    "failed_content": 3, "unique_hashes": 2},
+        "fetch": {"success": 2, "content_too_large": 1, "timeout": 1, "not_found": 1},
+    })
+    # nothing to fetch: the status array is empty, the stats row stays
+    quiet = PastaPipeline(spark, f"{tmp_table_dir}/quiet")
+    report = quiet.run_batch(
+        _raw_messages(spark).where("message_id = 7"),
+        make_fixture_transport(RESPONSES),
+        run_ts=F.lit(RUN_TS),
+    )
+    assert report["fetch"] == {} and report["messages"]["total_messages"] == 1
+    assert report["content"]["total_content"] == 0
+
+
 def test_second_run_is_idempotent_and_accumulates_retries(spark, tmp_table_dir):
     pipe = PastaPipeline(spark, tmp_table_dir)
     transport = make_fixture_transport(RESPONSES)

@@ -221,25 +221,47 @@ def test_remove_duplicated_spans_cuts_and_preserves_rows(spark):
     assert got[4]["n_removed"] == 0 and got[5]["text_kept"] == "tiny doc"
 
 
-def test_shared_token_scan_paths_identical(spark):
-    """Deriving shingle tables and SimHash signatures from one shared
-    token_table gives byte-identical results to the self-tokenizing
-    paths (the bench's shared-scan contract)."""
-    from pasta_pipeline_spark.operators.text_dedup import (
-        _shingle_table,
-        simhash_signatures,
-        token_table,
-    )
-    from pasta_pipeline_spark.schemas import load_table
+def test_shingle_table_pinned_to_shingles(spark):
+    """``_shingle_table`` tokenizes each document once and derives its
+    shingles from the token column; the result equals the reference
+    ``shingles(text)`` value for value, hashed and unhashed, on NULL,
+    empty, whitespace-only, short and repetitive texts — and the
+    executed plan splits the text once, outside every lambda."""
+    import re
+    from collections import Counter
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(100)
-    toks = token_table(docs, "doc_id", "text")
-    a = set(map(tuple, _shingle_table(docs, "doc_id", "text", 3).collect()))
-    b = set(map(tuple, _shingle_table(docs, "doc_id", "text", 3, token_frame=toks).collect()))
-    assert a == b and len(a) > 0
-    sa = {r["doc"]: r["simhash"] for r in simhash_signatures(docs, "doc_id", "text").collect()}
-    sb = {r["doc"]: r["simhash"] for r in simhash_signatures(docs, "doc_id", "text", token_frame=toks).collect()}
-    assert sa == sb
+    from pyspark.sql import functions as F
+
+    from pasta_pipeline_spark.operators.text_dedup import _shingle_table, shingles
+
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, ""),
+            (3, " \n\t "),
+            (4, "One"),
+            (5, "one Two"),
+            (6, "one two three"),
+            (7, "A b a b a b a b c"),
+            (8, "the quick  brown\nfox JUMPS over the quick brown fox"),
+            (9, "tail newline\n"),
+        ],
+        "doc_id long, text string",
+    )
+    for n in (2, 3):
+        for hashed in (False, True):
+            ref = shingles("text", n)
+            if hashed:
+                ref = F.array_distinct(F.transform(ref, lambda s: F.xxhash64(s)))
+            want = Counter(
+                tuple(r)
+                for r in docs.select(F.col("doc_id").alias("doc"), F.explode(ref)).collect()
+            )
+            got_df = _shingle_table(docs, "doc_id", "text", n, hashed=hashed)
+            assert Counter(tuple(r) for r in got_df.collect()) == want, (n, hashed)
+            plan = got_df._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("split(") == 1, plan
+            assert re.search(r"slice\(toks#\d+", plan), plan
 
 
 def test_remove_boilerplate_lines_group_scoped(spark):
